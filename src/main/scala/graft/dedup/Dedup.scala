@@ -43,8 +43,7 @@ object Dedup {
     duplicatesByKey(df, array_join(array_sort(array_distinct(TextOps.tokens(text))), " "), id)
 
   /** SimHash dedup: exact 64-bit signature collision. For hamming-≤k matching
-    * split the signature into k+1 bands (pigeonhole) and use [[minHashPairs]]'
-    * band-join pattern. */
+    * use [[hammingPairs]] over the signature (k+1 bands, pigeonhole). */
   def simhash(df: DataFrame, text: Column, id: Column): DataFrame =
     duplicatesByKey(df, TextOps.simhash64(text), id)
 
@@ -57,7 +56,9 @@ object Dedup {
     z ^ (z >>> 31)
   }
 
-  /** Exact Jaccard of two SORTED distinct long arrays — primitive merge. */
+  /** Exact Jaccard of two SORTED distinct long arrays — primitive merge.
+    * The reference implementation the specs pin [[jaccardCol]]'s
+    * arithmetic against. */
   private[dedup] def jaccardLong(a: Seq[Long], b: Seq[Long]): Double = {
     var i = 0; var j = 0; var inter = 0
     val na = a.length; val nb = b.length
@@ -70,10 +71,6 @@ object Dedup {
     val union = na + nb - inter
     if (union == 0) 1.0 else inter.toDouble / union
   }
-
-  // (the former jaccardUdf was removed in r6 — every verify path now uses
-  // the codegen'd jaccardCol below; jaccardLong stays as the reference
-  // implementation its specs pin the arithmetic against)
 
   /** Exact Jaccard of two SORTED distinct long-array columns as a fully
     * codegen'd expression — same arithmetic as [[jaccardLong]] (int
@@ -93,12 +90,13 @@ object Dedup {
     df.select(id.as("_id"), TextOps.wordShingleHashes(text, shingleWords).as("_sh"))
       .withColumn("_shkey", xxhash64(col("_sh")))
 
-  /** One representative row (min _id) per distinct shingle set. */
-  private[dedup] def repsOf(withSh: DataFrame): DataFrame =
-    withSh
-      .groupBy(col("_shkey"))
-      .agg(min_by(struct(col("_id"), col("_sh")), col("_id")).as("_r"))
-      .select(col("_shkey"), col("_r._id").as("_id"), col("_r._sh").as("_sh"))
+  /** One representative row (min _id) per distinct `keys` value, with its
+    * `payload` columns: (keys..., _id, payload...). */
+  private[dedup] def repsOf(
+      df: DataFrame, keys: Seq[String] = Seq("_shkey"), payload: Seq[String] = Seq("_sh")): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(min_by(struct(("_id" +: payload).map(col): _*), col("_id")).as("_r"))
+      .select(keys.map(col) ++ ("_id" +: payload).map(c => col(s"_r.$c").as(c)): _*)
 
   /** (_shkey, _id, band, bh, bh2): LSH band hashes of the representatives.
     * Band structs are built at plan time (Scala loop, not an interpreted
@@ -145,15 +143,45 @@ object Dedup {
     u(shingleHashes)
   }
 
+  /** Exact-Jaccard verify over the `_sh` shingle sets, shared by every
+    * shingle-set pair operator: identical sets score 1.0 (exactly what
+    * jaccardLong(a, a) returns, empty sets included). */
+  private[dedup] def jaccardVerify(threshold: Double): NearDupPairs.Verify =
+    NearDupPairs.Verify("jaccard", (a, b) => jaccardCol(a("_sh"), b("_sh")),
+      _ >= threshold, same = Some(lit(1.0)))
+
+  /** The MinHash hot-bucket policy (step 3 of [[minHashPairs]]): prefix
+    * extension by the next band's hash, its rows observed as
+    * `graft.minhash.hot` (observedMetrics key `hot_rows`), plus the `hs`
+    * smallest-id members of each hot bucket on the full single-band path —
+    * the same per-bucket all-pairs budget a cold bucket gets at the cap.
+    * Verified pairs found ONLY by that sample (`_src` == 4) ride the verify
+    * job as `hot_recovered` in `graft.minhash.hotrecall`: a direct
+    * measurement of what prefix extension alone would have lost. */
+  private[dedup] def minHashHot(maxBucket: Int, hotSample: Int): NearDupPairs.HotPolicy = {
+    import org.apache.spark.sql.expressions.Window
+    // -1 = follow maxBucket; 0 disables the sample
+    val hs = if (hotSample < 0) maxBucket else hotSample
+    val byId = Window.partitionBy(col("band"), col("bh")).orderBy(col("_id"))
+    NearDupPairs.HotPolicy(
+      hot => Seq(
+        hot.observe("graft.minhash.hot", count(lit(1)).as("hot_rows")) -> Seq("band", "bh", "bh2"),
+        hot.withColumn("_hr", row_number().over(byId)).filter(col("_hr") <= hs).drop("_hr") -> Seq("band", "bh")),
+      _.observe("graft.minhash.hotrecall",
+        sum(when(col("_src") === 4, 1L).otherwise(0L)).as("hot_recovered"),
+        count(lit(1)).as("verified_pairs")))
+  }
+
   /** MinHash+LSH candidate pairs with exact-Jaccard verification.
     * Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ `threshold`.
     *
-    * Scale design (mirrors [[hammingPairs]]):
+    * Scale design (the [[NearDupPairs]] skeleton, shared with
+    * [[hammingPairs]]):
     *  1. collapse documents with IDENTICAL shingle sets first (8-byte-key
-    *     groupBy on a hash of the set) — web corpora are dominated by exact
-    *     duplicates, which would otherwise all land in the same LSH buckets;
-    *     intra-group pairs have jaccard exactly 1.0, no verification needed;
-    *  2. LSH-band only the distinct-set REPRESENTATIVES;
+    *     groupBy on a hash of the set); intra-group pairs have jaccard
+    *     exactly 1.0, no verification needed;
+    *  2. LSH-band only the distinct-set REPRESENTATIVES (the banding
+    *     shuffle carries no shingle arrays — just key, id and band hashes);
     *  3. buckets larger than `maxBucket` are NOT dropped (the r1 guard lost
     *     recall silently): their members are re-bucketed with the band
     *     prefix EXTENDED by the following band's hash — i.e. candidates in
@@ -173,7 +201,9 @@ object Dedup {
     *     `graft.minhash.hotrecall` — a live measurement of the loss;
     *  4. candidates verified with exact Jaccard on the shingle sets, then
     *     expanded back through membership (members carry identical sets, so
-    *     the representative's jaccard IS the members' jaccard). */
+    *     the representative's jaccard IS the members' jaccard).
+    * Construction runs Spark jobs (three `truncate` cuts and the hot-bucket
+    * probe) — see [[NearDupPairs]] for the contract. */
   def minHashPairs(
       df: DataFrame,
       text: Column,
@@ -187,128 +217,19 @@ object Dedup {
       truncate: DataFrame => DataFrame = _.localCheckpoint(true)
   ): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rows = numHashes / bands
-    // hot-bucket recovery sample size: the hs smallest-id members of each
-    // hot bucket get the full all-pairs treatment (same per-bucket candidate
-    // budget as a cold bucket at the cap). -1 = follow maxBucket; 0 disables.
-    val hs = if (hotSample < 0) maxBucket else hotSample
-    // _shkey: 64-bit hash of the sorted distinct shingle hashes — the
-    // identical-set group key (xxhash64 over the array column is codegen'd).
-    // MATERIALIZED ONCE (r6): the frame feeds ~6 consumer subtrees (group
-    // sizes, reps, same-key pairs ×2, member expansion ×2), each of which
-    // used to re-run the scan + shingle kernel (an r3 repartition-based
-    // dedup of just the exchange was wall-clock neutral at 1M docs — 34.1 s
-    // vs 33.1 s — but the eager cut also de-duplicates the kernel and, with
-    // reps/banded cut below, the 32-hash minhash UDF, which the r6 oracle-
-    // scale profile showed dominating the composed pipeline: ~9 s of q74's
-    // 13 s were minHashPairs re-derivations).
+    // MATERIALIZED ONCE: the shingled frame feeds ~6 consumer subtrees
+    // (group sizes, reps, same-key pairs ×2, member expansion ×2), each of
+    // which used to re-run the scan + shingle kernel; reps feed the banding
+    // AND the verify-side shingle join; banded feeds counts/cold/hot —
+    // without the cuts each consumer re-ran the minhash-signature kernel
+    // chain (an oracle-scale profile: ~9 s of q74's 13 s were
+    // minHashPairs re-derivations).
     val withSh = truncate(shingled(df, text, id, shingleWords))
-
-    // 1. identical-set groups: intra-group pairs are jaccard 1.0 by identity
-    val groupSizes = withSh.groupBy(col("_shkey")).agg(count(lit(1)).as("_cnt"))
-    val samePairs = {
-      val dup = withSh.select(col("_shkey"), col("_id"))
-        .join(groupSizes.filter(col("_cnt") > 1).select("_shkey"), Seq("_shkey"))
-      dup.select(col("_shkey"), col("_id").as("id_a"))
-        .join(dup.select(col("_shkey"), col("_id").as("id_b")), Seq("_shkey"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-    }
-
-    // representatives: one row (min id) per distinct shingle set.
-    // Both cut eagerly (r6): reps feeds the banding AND the verify-side
-    // shingle join; banded feeds counts/cold/hot/hotSampled — without the
-    // cuts each consumer re-ran the minhash-signature kernel chain.
     val reps = truncate(repsOf(withSh))
-    // 2. band the representatives (the banding shuffle carries NO shingle
-    // arrays — just (key, id, band hashes), 40 B/row × bands; shingles are
-    // joined back only for the tiny verified-candidate set)
     val banded = truncate(bandedOf(reps, numHashes, bands))
-
-    // counts/cold re-derive from the CHECKPOINTED banded per consumer —
-    // measured cheaper than materializing them too (r6: the extra cut jobs
-    // cost more than the re-run of one join over in-memory blocks)
-    val counts = banded.groupBy(col("band"), col("bh")).agg(count(lit(1)).as("_bc"))
-    val cold = banded.join(counts.filter(col("_bc").between(2, maxBucket)), Seq("band", "bh"))
-    // 3. hot buckets: extend the prefix with the following band's hash.
-    // RECALL TRADE (unlike hammingPairs, whose interleaved sub-banding is
-    // provably exact at any maxBucket): a hot-region candidate must agree on
-    // TWO consecutive bands instead of one, so a true pair whose ONLY
-    // agreeing band was hot is dropped by the prefix path. Two mitigations
-    // keep the trade measured, never silent:
-    //  - the rows routed through prefix-extension surface as the named
-    //    observation `graft.minhash.hot` (observedMetrics key `hot_rows`,
-    //    readable from any QueryExecutionListener); 0 means the fast path
-    //    was exact, > 0 means the two-band narrowing was live;
-    //  - a bounded DETERMINISTIC sample (the `hs` smallest-id members of
-    //    each hot bucket — the same per-bucket all-pairs budget a cold
-    //    bucket gets at the cap) takes the full single-band path, so
-    //    hot-band-only true pairs among sampled members are RECOVERED, and
-    //    the count of verified pairs found ONLY by this path rides the same
-    //    job as `hot_recovered` in the `graft.minhash.hotrecall`
-    //    observation — a direct measurement of what prefix-extension alone
-    //    would have lost.
-    // hot-machinery short-circuit (r6): one cheap aggregation over the
-    // CHECKPOINTED banded frame decides whether any bucket exceeds the
-    // cap; when none does, the hot join + window + two extra pair
-    // self-joins contribute provably nothing (their inputs are empty) and
-    // are omitted from the plan. Beacon semantics are unchanged — the
-    // `graft.minhash.hot` observation's absence means exactly what
-    // hot_rows == 0 meant ("the fast path was exact"), the contract
-    // PipelineWarnings already renders by.
-    val hasHot = counts.filter(col("_bc") > maxBucket).limit(1).count() > 0
-    val hotBase = banded.join(counts.filter(col("_bc") > maxBucket), Seq("band", "bh"))
-    val hot = hotBase.observe("graft.minhash.hot", count(lit(1)).as("hot_rows"))
-    import org.apache.spark.sql.expressions.Window
-    val wHot = Window.partitionBy(col("band"), col("bh")).orderBy(col("_id"))
-    val hotSampled = hotBase
-      .withColumn("_hr", row_number().over(wHot))
-      .filter(col("_hr") <= hs)
-      .drop("_hr")
-
-    def pairsOf(bk: DataFrame, keys: Seq[String], src: Int): DataFrame =
-      bk.select((keys.map(col) ++ Seq(col("_shkey").as("_ka"), col("_id").as("id_a"))): _*)
-        .join(bk.select((keys.map(col) ++ Seq(col("_shkey").as("_kb"), col("_id").as("id_b"))): _*), keys)
-        .filter(col("id_a") < col("id_b"))
-        .select(col("_ka"), col("_kb"), lit(src).as("_src"))
-
-    // 4. verify candidates once per representative pair (shingle sets join
-    // in HERE, after dedup, so each set crosses the wire once per pair side);
-    // _src bit-or records every path that produced the pair (1 = cold band,
-    // 2 = hot prefix-extension, 4 = hot sample), so _src == 4 after the
-    // verify is exactly "recovered: sample-only"
-    val shingleOf = reps.select(col("_shkey"), col("_sh"))
-    val coldPairs = pairsOf(cold, Seq("band", "bh"), 1)
-    val allPairs =
-      if (!hasHot) coldPairs
-      else coldPairs
-        .unionAll(pairsOf(hot, Seq("band", "bh", "bh2"), 2))
-        .unionAll(pairsOf(hotSampled, Seq("band", "bh"), 4))
-    val repPairs = allPairs
-      .groupBy(col("_ka"), col("_kb"))
-      .agg(bit_or(col("_src")).as("_src"))
-      .join(shingleOf.select(col("_shkey").as("_ka"), col("_sh").as("_sh_a")), Seq("_ka"))
-      .join(shingleOf.select(col("_shkey").as("_kb"), col("_sh").as("_sh_b")), Seq("_kb"))
-      .select(col("_ka"), col("_kb"), col("_src"), jaccardCol(col("_sh_a"), col("_sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .observe("graft.minhash.hotrecall",
-        sum(when(col("_src") === 4, 1L).otherwise(0L)).as("hot_recovered"),
-        count(lit(1)).as("verified_pairs"))
-
-    val memberIds = withSh.select(col("_shkey"), col("_id"))
-    val crossPairs = repPairs
-      .join(memberIds.select(col("_shkey").as("_ka"), col("_id").as("_ia")), Seq("_ka"))
-      .join(memberIds.select(col("_shkey").as("_kb"), col("_id").as("_ib")), Seq("_kb"))
-      .select(
-        least(col("_ia"), col("_ib")).as("id_a"),
-        greatest(col("_ia"), col("_ib")).as("id_b"),
-        col("jaccard")
-      )
-
-    samePairs
-      .unionAll(crossPairs)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(max(col("jaccard")).as("jaccard"))
+    NearDupPairs(withSh, reps.select(col("_shkey"), col("_sh")), "_shkey",
+      NearDupPairs.Bands(banded, Seq("band", "bh"), maxBucket, minHashHot(maxBucket, hotSample), max(_)),
+      jaccardVerify(threshold))
   }
 
   /** Bits of `sig` whose index ≡ k (mod m), compacted into a long — an
@@ -326,11 +247,11 @@ object Dedup {
     * EXACT (full recall + precision): every pair within `maxHamming` bits is
     * emitted, none outside.
     *
-    * Scale design (phash clusters are the north-star skew case):
+    * Scale design (the [[NearDupPairs]] skeleton; phash clusters are the
+    * north-star skew case):
     *  1. collapse identical signatures with a partial-agg groupBy — the only
     *     shuffle that sees every row, and its key is 8 bytes;
-    *     hamming-0 pairs come straight from group membership (that output is
-    *     inherently quadratic in the group size — it IS the answer);
+    *     hamming-0 pairs come straight from group membership;
     *  2. band only the DISTINCT signatures into `bands` contiguous bit bands
     *     (pigeonhole: ≤ bands-1 flips ⇒ some band equal);
     *  3. buckets larger than `maxBucket` are NOT dropped (the r1 guard lost
@@ -342,7 +263,8 @@ object Dedup {
     *  4. verify true bit_count(xor) ≤ maxHamming on signature pairs, then
     *     expand back through group membership (tiny broadcast joins).
     * `maxBucket` is thus a pure performance knob — results are identical at
-    * any setting. */
+    * any setting. Construction runs Spark jobs (two `truncate` cuts and the
+    * hot-bucket probe) — see [[NearDupPairs]] for the contract. */
   def hammingPairs(
       df: DataFrame,
       sig: Column,
@@ -358,21 +280,7 @@ object Dedup {
     val mask = if (width == 64) -1L else (1L << width) - 1
     // 16 B/row, feeds five consumer subtrees — materialized once (r6)
     val base = truncate(df.select(id.as("_id"), sig.cast("long").as("_sig")))
-
-    // 1. identical-signature groups (map-side combine soaks up skew)
-    val groups = base.groupBy(col("_sig")).agg(count(lit(1)).as("_cnt"))
-    val members = base // (_id, _sig) — joined back twice at the end
-    val zeroPairs = {
-      val dup = members.join(
-        groups.filter(col("_cnt") > 1).select(col("_sig")), Seq("_sig"))
-      dup.select(col("_sig"), col("_id").as("id_a"))
-        .join(dup.select(col("_sig"), col("_id").as("id_b")), Seq("_sig"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), lit(0).as("hamming"))
-    }
-
-    // 2. band the distinct signatures
-    val sigs = groups.select(col("_sig"))
+    val sigs = base.select(col("_sig")).distinct()
     val bandCols = (0 until bands).map { b =>
       struct(lit(b).as("band"), shiftrightunsigned(col("_sig"), b * width).bitwiseAND(mask).as("bv"))
     }
@@ -380,49 +288,16 @@ object Dedup {
     val banded = truncate(sigs
       .select(col("_sig"), explode(array(bandCols: _*)).as("_b"))
       .select(col("_sig"), col("_b.band"), col("_b.bv")))
-    val counts = banded.groupBy(col("band"), col("bv")).agg(count(lit(1)).as("_bc"))
-    val cold = banded.join(counts.filter(col("_bc").between(2, maxBucket)), Seq("band", "bv"))
-
-    // 3. hot buckets: second-level interleaved split (recall-preserving).
-    // Short-circuited when no bucket exceeds the cap (r6): one cheap
-    // aggregation over the checkpointed banded frame — the hot subtree's
-    // inputs are provably empty then, so omitting it changes nothing.
-    val hasHot = counts.filter(col("_bc") > maxBucket).limit(1).count() > 0
+    // hot buckets: second-level interleaved split (recall-preserving)
     val m2 = maxHamming + 1
     val subUdf = udf((s: Long, k: Int) => interleavedBand(s, k, m2))
-    val hot = banded.join(counts.filter(col("_bc") > maxBucket), Seq("band", "bv"))
-    val hotSub = hot.select(
-      col("_sig"), col("band"), col("bv"),
-      explode(array((0 until m2).map(lit(_)): _*)).as("sub")
-    ).withColumn("sbv", subUdf(col("_sig"), col("sub")))
-
-    def pairsOf(bk: DataFrame, keys: Seq[String]): DataFrame =
-      bk.select((keys.map(col) :+ col("_sig").as("_sa")): _*)
-        .join(bk.select((keys.map(col) :+ col("_sig").as("_sb")): _*), keys)
-        .filter(col("_sa") < col("_sb"))
-        .select(col("_sa"), col("_sb"))
-
-    val coldSigPairs = pairsOf(cold, Seq("band", "bv"))
-    val sigPairs = (if (!hasHot) coldSigPairs
-                    else coldSigPairs.unionAll(pairsOf(hotSub, Seq("band", "bv", "sub", "sbv"))))
-      .distinct()
-      .select(col("_sa"), col("_sb"), bit_count(col("_sa").bitwiseXOR(col("_sb"))).as("hamming"))
-      .filter(col("hamming").between(1, maxHamming))
-
-    // 4. expand signature pairs back to id pairs through membership
-    val crossPairs = sigPairs
-      .join(members.select(col("_sig").as("_sa"), col("_id").as("_ia")), Seq("_sa"))
-      .join(members.select(col("_sig").as("_sb"), col("_id").as("_ib")), Seq("_sb"))
-      .select(
-        least(col("_ia"), col("_ib")).as("id_a"),
-        greatest(col("_ia"), col("_ib")).as("id_b"),
-        col("hamming")
-      )
-
-    zeroPairs
-      .unionAll(crossPairs)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(min(col("hamming")).as("hamming"))
+    val subBands = NearDupPairs.HotPolicy(hot => Seq(
+      hot.select(col("_sig"), col("band"), col("bv"), explode(array((0 until m2).map(lit(_)): _*)).as("sub"))
+        .withColumn("sbv", subUdf(col("_sig"), col("sub"))) -> Seq("band", "bv", "sub", "sbv")))
+    NearDupPairs(base, sigs, "_sig",
+      NearDupPairs.Bands(banded, Seq("band", "bv"), maxBucket, subBands, min(_)),
+      NearDupPairs.Verify("hamming", (a, b) => bit_count(a("_sig").bitwiseXOR(b("_sig"))),
+        _.between(1, maxHamming), same = Some(lit(0))))
   }
 
   /** Exact n-gram Jaccard similarity for all pairs within blocks (e.g. same
@@ -440,12 +315,9 @@ object Dedup {
     * past it the quadratic pair volume is the wrong tool and the call
     * raises, naming [[minHashPairs]] (the scale path). The guard costs one
     * extra aggregation pass over the shingled corpus; the baseline is for
-    * modest blocks by contract, where that pass is cheap. The guard makes
-    * CONSTRUCTION eager (building the frame runs that pass as a Spark job
-    * before the quadratic join can start — deliberate: a lazy in-job
-    * check could not abort the blow-up it exists to prevent). Opt out
-    * with `maxBlockDistinct = Int.MaxValue`, which restores a fully lazy
-    * frame. Output: (id_a, id_b, jaccard). */
+    * modest blocks by contract, where that pass is cheap. Construction runs
+    * Spark jobs (the `truncate` cut and the guard) — see [[NearDupPairs]]
+    * for the contract. Output: (id_a, id_b, jaccard). */
   def ngramJaccardPairs(
       df: DataFrame,
       text: Column,
@@ -461,48 +333,10 @@ object Dedup {
     val base = truncate(df
       .select(block.as("_blk"), id.as("_id"), TextOps.wordShingleHashes(text, shingleWords).as("_sh"))
       .withColumn("_shkey", xxhash64(col("_sh"))))
-    val members = base.select(col("_blk"), col("_shkey"), col("_id"))
-    val groups = members.groupBy(col("_blk"), col("_shkey")).agg(count(lit(1)).as("_cnt"))
-    if (maxBlockDistinct != Int.MaxValue) {
-      val r = groups.groupBy(col("_blk")).agg(count(lit(1)).as("_d")).agg(max(col("_d"))).head
-      val worst = if (r.isNullAt(0)) 0L else r.getLong(0)
-      require(worst <= maxBlockDistinct,
-        s"ngramJaccardPairs: largest block holds $worst DISTINCT shingle sets " +
-          s"(> maxBlockDistinct=$maxBlockDistinct) - the all-pairs baseline is quadratic in that " +
-          "count; use Dedup.minHashPairs (banded MinHash, bucket-bounded) for corpora of this " +
-          "shape, or raise maxBlockDistinct explicitly")
-    }
-
-    // intra-group pairs: identical sets, jaccard 1.0 by identity
-    val samePairs = {
-      val dup = members.join(
-        groups.filter(col("_cnt") > 1).select(col("_blk"), col("_shkey")), Seq("_blk", "_shkey"))
-      dup.select(col("_blk"), col("_shkey"), col("_id").as("id_a"))
-        .join(dup.select(col("_blk"), col("_shkey"), col("_id").as("id_b")), Seq("_blk", "_shkey"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-    }
-
-    // rep-level all-pairs (one row per distinct set per block), then expand
-    val reps = base
-      .groupBy(col("_blk"), col("_shkey"))
-      .agg(min_by(struct(col("_id"), col("_sh")), col("_id")).as("_r"))
-      .select(col("_blk"), col("_shkey"), col("_r._sh").as("_sh"))
-    val a = reps.select(col("_blk"), col("_shkey").as("_ka"), col("_sh").as("_sh_a"))
-    val b = reps.select(col("_blk"), col("_shkey").as("_kb"), col("_sh").as("_sh_b"))
-    val repPairs = a.join(b, Seq("_blk"))
-      .filter(col("_ka") < col("_kb"))
-      .select(col("_blk"), col("_ka"), col("_kb"), jaccardCol(col("_sh_a"), col("_sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    val crossPairs = repPairs
-      .join(members.select(col("_blk"), col("_shkey").as("_ka"), col("_id").as("_ia")), Seq("_blk", "_ka"))
-      .join(members.select(col("_blk"), col("_shkey").as("_kb"), col("_id").as("_ib")), Seq("_blk", "_kb"))
-      .select(
-        least(col("_ia"), col("_ib")).as("id_a"),
-        greatest(col("_ia"), col("_ib")).as("id_b"),
-        col("jaccard"))
-
-    samePairs.unionAll(crossPairs)
+    NearDupPairs(base, repsOf(base, Seq("_blk", "_shkey")).drop("_id"), "_shkey",
+      NearDupPairs.Blocks(maxBlockDistinct, "ngramJaccardPairs", "shingle sets",
+        "minHashPairs (banded MinHash, bucket-bounded)"),
+      jaccardVerify(threshold))
   }
 
   /** Candidate near-dup pairs by SHARED WINNOWING FINGERPRINTS (rolling-hash
@@ -592,9 +426,9 @@ object Dedup {
     * so zero-norm vectors keep their NaN behaviour), and rep-level pairs
     * expand back through membership. Results identical to naive all-pairs.
     * Fail-fast scale guard: raises past `maxBlockDistinct` DISTINCT vectors
-    * in any block, naming [[embeddingCosinePairsLsh]] (the scale path);
-    * as in [[ngramJaccardPairs]], the guard makes construction EAGER by
-    * design — `maxBlockDistinct = Int.MaxValue` restores laziness. */
+    * in any block, naming [[embeddingCosinePairsLsh]] (the scale path).
+    * Construction runs Spark jobs (the `truncate` cut and the guard) — see
+    * [[NearDupPairs]] for the contract. */
   def embeddingCosinePairs(
       df: DataFrame,
       vec: Column,
@@ -615,57 +449,11 @@ object Dedup {
       vec.cast("array<double>").as("_v"),
       Ann.l2norm(vec).as("_n")
     ).withColumn("_vkey", xxhash64(col("_v"))))
-    val members = base.select(col("_blk"), col("_vkey"), col("_id"))
-    val groups = members.groupBy(col("_blk"), col("_vkey")).agg(count(lit(1)).as("_cnt"))
-    // fail-fast scale guard (same contract as ngramJaccardPairs): quadratic
-    // in DISTINCT vectors per block — past the cap, raise and name the
-    // bucket-bounded sibling instead of running an all-pairs explosion
-    if (maxBlockDistinct != Int.MaxValue) {
-      val r = groups.groupBy(col("_blk")).agg(count(lit(1)).as("_d")).agg(max(col("_d"))).head
-      val worst = if (r.isNullAt(0)) 0L else r.getLong(0)
-      require(worst <= maxBlockDistinct,
-        s"embeddingCosinePairs: largest block holds $worst DISTINCT vectors " +
-          s"(> maxBlockDistinct=$maxBlockDistinct) - the all-pairs baseline is quadratic in that " +
-          "count; use Dedup.embeddingCosinePairsLsh (sign-LSH, bucket-bounded) for corpora of " +
-          "this shape, or raise maxBlockDistinct explicitly")
-    }
-    val reps = base
-      .groupBy(col("_blk"), col("_vkey"))
-      .agg(min_by(struct(col("_id"), col("_v"), col("_n")), col("_id")).as("_r"))
-      .select(col("_blk"), col("_vkey"), col("_r._v").as("_v"), col("_r._n").as("_n"))
-
-    // intra-group pairs: same vector — run the pair arithmetic on the rep
-    // against itself (dot(v,v)/(n*n); identical to what the naive all-pairs
-    // would compute for the two equal member vectors)
-    val samePairs = {
-      val selfCos = reps.select(col("_blk"), col("_vkey"),
-        (Ann.dot(col("_v"), col("_v")) / (col("_n") * col("_n"))).as("cosine"))
-        .filter(col("cosine") >= threshold)
-      val dup = members.join(
-        groups.filter(col("_cnt") > 1).select(col("_blk"), col("_vkey")), Seq("_blk", "_vkey"))
-      dup.select(col("_blk"), col("_vkey"), col("_id").as("id_a"))
-        .join(dup.select(col("_blk"), col("_vkey"), col("_id").as("id_b")), Seq("_blk", "_vkey"))
-        .filter(col("id_a") < col("id_b"))
-        .join(selfCos, Seq("_blk", "_vkey"))
-        .select(col("id_a"), col("id_b"), col("cosine"))
-    }
-
-    val a = reps.select(col("_blk"), col("_vkey").as("_ka"), col("_v").as("_va"), col("_n").as("_na"))
-    val b = reps.select(col("_blk"), col("_vkey").as("_kb"), col("_v").as("_vb"), col("_n").as("_nb"))
-    val repPairs = a.join(b, Seq("_blk"))
-      .filter(col("_ka") < col("_kb"))
-      .select(col("_blk"), col("_ka"), col("_kb"),
-        (Ann.dot(col("_va"), col("_vb")) / (col("_na") * col("_nb"))).as("cosine"))
-      .filter(col("cosine") >= threshold)
-    val crossPairs = repPairs
-      .join(members.select(col("_blk"), col("_vkey").as("_ka"), col("_id").as("_ia")), Seq("_blk", "_ka"))
-      .join(members.select(col("_blk"), col("_vkey").as("_kb"), col("_id").as("_ib")), Seq("_blk", "_kb"))
-      .select(
-        least(col("_ia"), col("_ib")).as("id_a"),
-        greatest(col("_ia"), col("_ib")).as("id_b"),
-        col("cosine"))
-
-    samePairs.unionAll(crossPairs)
+    NearDupPairs(base, repsOf(base, Seq("_blk", "_vkey"), Seq("_v", "_n")).drop("_id"), "_vkey",
+      NearDupPairs.Blocks(maxBlockDistinct, "embeddingCosinePairs", "vectors",
+        "embeddingCosinePairsLsh (sign-LSH, bucket-bounded)"),
+      NearDupPairs.Verify("cosine", (a, b) => Ann.dot(a("_v"), b("_v")) / (a("_n") * b("_n")),
+        _ >= threshold, same = None))
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup of an

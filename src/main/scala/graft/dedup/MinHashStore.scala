@@ -82,7 +82,11 @@ object MinHashStore {
     * other side is a corpus doc or another batch doc). Equals the
     * full-corpus [[Dedup.minHashPairs]] output restricted to batch-touching
     * pairs — the store contributes precomputed banding, so the union of
-    * store and batch band rows IS the full-corpus banding.
+    * store and batch band rows IS the full-corpus banding. Runs the
+    * [[NearDupPairs]] skeleton with the minHashPairs hot policy, so the
+    * `graft.minhash.hot`/`graft.minhash.hotrecall` beacons fire here too.
+    * Construction runs Spark jobs (four `truncate` cuts and the hot-bucket
+    * probe over the union banding) — see [[NearDupPairs]] for the contract.
     *
     * The typical admission flow: screen the batch, drop or canonicalize
     * the flagged docs, then [[append]] the survivors. */
@@ -98,8 +102,6 @@ object MinHashStore {
       truncate: DataFrame => DataFrame = _.localCheckpoint(true)
   ): DataFrame = {
     val g = readMeta(spark, path)
-    val hs = if (hotSample < 0) maxBucket else hotSample
-
     // ONLY the BATCH-derived frames are materialized (r6): they feed 2-4
     // consumer subtrees each and carry the shingle/minhash kernel cost.
     // The store-side halves of the unions below stay bare parquet reads —
@@ -118,68 +120,15 @@ object MinHashStore {
     // once (batch-sized); the union with the store stays lazy
     val newReps = truncate(
       batchReps.join(storeReps.select(col("_shkey")), Seq("_shkey"), "left_anti"))
-    val reps = storeReps.unionAll(newReps.select(col("_shkey"), col("_sh")))
     val banded = spark.read.parquet(s"$path/banded")
       .unionAll(truncate(Dedup.bandedOf(newReps, g.numHashes, g.bands)))
-    // keys that have ≥ 1 batch member: rep-pair candidates must touch one
-    val batchKeys = batchSh.select(col("_shkey")).distinct()
-
-    // 1. identical-set pairs touching the batch (corpus dups of a batch doc,
-    // batch-internal exact dups): jaccard 1.0 by identity
-    val samePairs = {
-      val dup = members
-        .join(batchKeys, Seq("_shkey")) // only groups with a batch member
-      dup.select(col("_shkey"), col("_id").as("id_a"), col("_new").as("_na"))
-        .join(dup.select(col("_shkey"), col("_id").as("id_b"), col("_new").as("_nb")), Seq("_shkey"))
-        .filter(col("id_a") < col("id_b") && (col("_na") || col("_nb")))
-        .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-    }
-
-    // 2-3. the minHashPairs candidate machinery over the UNION banding
-    val counts = banded.groupBy(col("band"), col("bh")).agg(count(lit(1)).as("_bc"))
-    val cold = banded.join(counts.filter(col("_bc").between(2, maxBucket)), Seq("band", "bh"))
-    val hot = banded.join(counts.filter(col("_bc") > maxBucket), Seq("band", "bh"))
-    import org.apache.spark.sql.expressions.Window
-    val wHot = Window.partitionBy(col("band"), col("bh")).orderBy(col("_id"))
-    val hotSampled = hot.withColumn("_hr", row_number().over(wHot)).filter(col("_hr") <= hs).drop("_hr")
-
-    def pairsOf(bk: DataFrame, keys: Seq[String]): DataFrame =
-      bk.select((keys.map(col) ++ Seq(col("_shkey").as("_ka"), col("_id").as("id_a"))): _*)
-        .join(bk.select((keys.map(col) ++ Seq(col("_shkey").as("_kb"), col("_id").as("id_b"))): _*), keys)
-        .filter(col("id_a") < col("id_b"))
-        .select(col("_ka"), col("_kb"))
-
-    // 4. verify once per rep pair; only pairs whose key set touches the batch
-    val shingleOf = reps.select(col("_shkey"), col("_sh"))
-    val repPairs = pairsOf(cold, Seq("band", "bh"))
-      .unionAll(pairsOf(hot, Seq("band", "bh", "bh2")))
-      .unionAll(pairsOf(hotSampled, Seq("band", "bh")))
-      .distinct()
-      // touch-the-batch filter: two equi LEFT joins against the (small,
-      // broadcastable) batch key set — never an OR-condition join, which
-      // would plan as a nested-loop product
-      .join(batchKeys.select(col("_shkey").as("_ka"), lit(true).as("_fa")), Seq("_ka"), "left")
-      .join(batchKeys.select(col("_shkey").as("_kb"), lit(true).as("_fb")), Seq("_kb"), "left")
-      .filter(col("_fa").isNotNull || col("_fb").isNotNull)
-      .join(shingleOf.select(col("_shkey").as("_ka"), col("_sh").as("_sh_a")), Seq("_ka"))
-      .join(shingleOf.select(col("_shkey").as("_kb"), col("_sh").as("_sh_b")), Seq("_kb"))
-      .select(col("_ka"), col("_kb"), Dedup.jaccardCol(col("_sh_a"), col("_sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-
-    // 5. expand through membership, keep pairs with ≥ 1 new side
-    val crossPairs = repPairs
-      .join(members.select(col("_shkey").as("_ka"), col("_id").as("_ia"), col("_new").as("_na")), Seq("_ka"))
-      .join(members.select(col("_shkey").as("_kb"), col("_id").as("_ib"), col("_new").as("_nb")), Seq("_kb"))
-      .filter(col("_na") || col("_nb"))
-      .select(
-        least(col("_ia"), col("_ib")).as("id_a"),
-        greatest(col("_ia"), col("_ib")).as("id_b"),
-        col("jaccard"))
-
-    samePairs
-      .unionAll(crossPairs)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(max(col("jaccard")).as("jaccard"))
+    val reps = storeReps.select(col("_shkey"), col("_sh")).unionAll(newReps.select(col("_shkey"), col("_sh")))
+    NearDupPairs(members, reps, "_shkey",
+      NearDupPairs.Bands(banded, Seq("band", "bh"), maxBucket, Dedup.minHashHot(maxBucket, hotSample), max(_)),
+      Dedup.jaccardVerify(threshold),
+      // keys with ≥ 1 batch member: identical-set groups and rep-pair
+      // candidates must touch one
+      batchKeys = Some(batchSh.select(col("_shkey")).distinct()))
   }
 
   // meta rides the same filesystem as the store (parquet, one row), so the

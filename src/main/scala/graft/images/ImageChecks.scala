@@ -87,18 +87,6 @@ object ImageChecks {
   def withDecoded(df: DataFrame, bytesCol: String = "bytes"): DataFrame =
     df.withColumn("_decoded", decodeUdf(col(bytesCol)))
 
-  /** Synthesize the payload-validity boolean column (the reference's
-    * `adr_geometry_check` pattern): true ⇔ bytes decode AND the decoded
-    * width/height/format equal the declared columns. */
-  def withValidityColumn(df: DataFrame): DataFrame =
-    withDecoded(df).withColumn(
-      "adr_geometry_check",
-      col("_decoded.ok") &&
-        col("_decoded.w") === col("w") &&
-        col("_decoded.h") === col("h") &&
-        col("_decoded.fmt") === col("fmt")
-    ).drop("_decoded")
-
   /** Full image-table validation: violations frame with the engine's
     * canonical schema (code, row_number, column_number, message, row).
     *

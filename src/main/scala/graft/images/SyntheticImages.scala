@@ -136,15 +136,12 @@ object SyntheticImages {
       phash: Long
   )
 
-  def row(id: Long): ImageRow = row(id, withBytes = true)
-
-  /** withBytes=false skips the codec round-trip (for metadata-only checks). */
-  def row(id: Long, withBytes: Boolean): ImageRow = {
+  def row(id: Long): ImageRow = {
     val w = 24 + (id % 5).toInt * 8
     val h = 24 + (id % 3).toInt * 8
     val fmt = Formats((id % 2).toInt)
     val img = renderPattern(id, w, h)
-    val bytes = if (withBytes) encode(img, fmt) else Array.empty[Byte]
+    val bytes = encode(img, fmt)
     val ph = averageHash(img)
     val base = ImageRow(f"img_$id%012d", bytes, w, h, fmt, caption(id), ph)
     if (id % 100 != 7) base
@@ -154,7 +151,7 @@ object SyntheticImages {
         case 1 => base.copy(h = h + 2) // declared height wrong
         case 2 => base.copy(fmt = if (fmt == "png") "jpeg" else "png") // fmt label wrong
         case 3 => // truncated (undecodable) payload
-          base.copy(bytes = if (withBytes) bytes.take(math.max(bytes.length / 4, 8)) else bytes)
+          base.copy(bytes = bytes.take(math.max(bytes.length / 4, 8)))
         case 4 => base.copy(caption = "") // empty caption (required violation)
         case 5 => base.copy(caption = caption(id) + " CORRUPTED") // caption mismatch
         case _ => base.copy(image_id = f"img_${math.max(id - 100, 0)}%012d") // duplicate id
@@ -165,22 +162,6 @@ object SyntheticImages {
     * partitions (defaults to the session's shuffle partition count). */
   def generate(spark: SparkSession, n: Long, parallelism: Int = 0): DataFrame =
     generateWithId(spark, n, parallelism).drop("row_id")
-
-  /** Metadata-only variant: same rows minus `bytes` (skips the expensive
-    * encode). Use for checks that never touch the payload (uniqueness,
-    * caption, stats) — the column-pruned path a real stored table would give
-    * for free. */
-  def generateMeta(spark: SparkSession, n: Long, parallelism: Int = 0): DataFrame = {
-    import spark.implicits._
-    val p = if (parallelism > 0) parallelism else spark.sessionState.conf.numShufflePartitions
-    spark
-      .range(0, n, 1, p)
-      .map { id =>
-        val r = row(id, withBytes = false)
-        (id + 1, r.image_id, r.w, r.h, r.fmt, r.caption, r.phash)
-      }
-      .toDF("row_id", "image_id", "w", "h", "fmt", "caption", "phash")
-  }
 
   /** Materialize the deterministic table ONCE to a parquet cache and return
     * the path (idempotent: keyed by n; `_SUCCESS` marks a complete write).

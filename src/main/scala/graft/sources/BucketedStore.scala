@@ -29,23 +29,4 @@ object BucketedStore {
       .saveAsTable(table)
 
   def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
-
-  /** FK violations between two bucketed tables (both bucketed on their join
-    * key with the same bucket count): rows of `factTable` whose `factKey`
-    * has no match in `dimTable.dimKey` — a left-anti join that runs
-    * SHUFFLE-FREE over the co-located buckets. */
-  def fkViolationsBucketed(
-      spark: SparkSession,
-      factTable: String,
-      factKey: String,
-      dimTable: String,
-      dimKey: String
-  ): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    spark.table(factTable).join(
-      spark.table(dimTable).select(col(dimKey).as(factKey)),
-      Seq(factKey),
-      "left_anti"
-    )
-  }
 }

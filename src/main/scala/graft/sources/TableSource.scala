@@ -52,10 +52,6 @@ object TableSource {
     }
   }
 
-  def readParquet(spark: SparkSession, path: String): Either[SourceError, DataFrame] =
-    try Right(spark.read.parquet(path))
-    catch { case e: Exception => Left(IoError(e.getMessage)) }
-
   /** CSV reader with the reference's semantics (jobs.py:245-269: default
     * sep=';', decimal=',', utf-8; we default sep=',' and take it as a
     * parameter). Strict UTF-8: undecodable bytes → encoding-error.

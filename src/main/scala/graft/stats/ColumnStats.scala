@@ -20,10 +20,6 @@ object ColumnStats {
       max: Option[Double]
   )
 
-  /** Long-format stats frame: one row per profiled column. `exactDistinct`
-    * uses count(distinct) (for oracle comparability in tests); the scale
-    * default is approx_count_distinct (HLL++, mergeable, single-pass even for
-    * many columns). */
   /** Per-column profile card. Default (approx) mode is ONE wide
     * aggregation pass; `exactDistinct = true` additionally runs one exact
     * two-phase countDistinct job PER column, concurrently with the base

@@ -63,20 +63,6 @@ object TextOps {
   def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[\\p{Punct}]", ""))
 
-  /** Quality signals in one struct: chars, tokens, mean token length,
-    * stopword ratio, punctuation ratio. Mirrors the length/punct/stopword
-    * heuristics used by large-scale corpus filters (C4/Gopher-style rules). */
-  def qualityStruct(text: Column, stopwords: Seq[String] = defaultStopwords): Column = {
-    val n = tokenCount(text)
-    struct(
-      length(text).as("n_chars"),
-      n.as("n_tokens"),
-      (length(text).cast("double") / n).as("mean_token_len"),
-      (stopwordCount(text, stopwords).cast("double") / n).as("stopword_ratio"),
-      (punctCount(text).cast("double") / greatest(length(text), lit(1))).as("punct_ratio")
-    )
-  }
-
   /** Marker-stopword language-ID heuristic: pick the language whose marker
     * words occur most among the tokens; `unk` when nothing matches. The
     * marker lists are deliberately tiny — this is an n-gram/stopword
@@ -119,20 +105,6 @@ object TextOps {
   def fingerprint(text: Column): Column =
     xxhash64(lower(regexp_replace(trim(text), "\\s+", " ")))
 
-  /** Character n-gram shingles (for MinHash / Jaccard). Per-row kernel UDF
-    * (see simhash64 note on interpreted higher-order functions). */
-  def charShingles(text: Column, n: Int = 5): Column = {
-    val nn = n
-    val u = udf { (s: String) =>
-      if (s == null) Seq.empty[String]
-      else {
-        val norm = s.trim.replaceAll("\\s+", " ").toLowerCase
-        if (norm.length <= nn) Seq(norm)
-        else norm.sliding(nn).distinct.toSeq
-      }
-    }
-    u(text)
-  }
 
   /** Word n-gram shingle HASHES: sorted distinct 64-bit hashes of the
     * n-gram shingles. The representation of choice for set-similarity at
@@ -228,9 +200,6 @@ object TextOps {
     * distributed; the UDF is isolated to the signature projection so the
     * surrounding plan stays codegen'd. */
   def simhash64(text: Column): Column = simhashUdf(text)
-
-  /** Hamming distance between two 64-bit signatures. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** Winnowing fingerprints (the MOSS construction; Schleimer/Wilkerson/
     * Aiken, SIGMOD'03): a TRUE ROLLING polynomial hash over character

@@ -59,6 +59,22 @@ class MinHashStoreSpec extends SparkSpec {
     assert(got == full.filter(p => p._1 % 2 == 1 || p._2 % 2 == 1))
   }
 
+  test("incremental probe in the hot regime surfaces graft.minhash.hot through PipelineWarnings") {
+    val (corpus, batch) = split(allDocs)
+    val path = Files.createTempDirectory("graft_mhstore_beacon").toString + "/store"
+    MinHashStore.write(corpus, col("text"), col("doc_id"), path, bands = 8)
+    val pw = graft.report.PipelineWarnings.register(spark)
+    try {
+      // maxBucket = 1: every shared band bucket is hot
+      MinHashStore
+        .minHashPairsIncremental(spark, batch, col("text"), col("doc_id"), path, threshold = 0.3, maxBucket = 1)
+        .collect()
+      // hot and hotrecall ride one job, so both arrive together
+      val warnings = pw.await(minBeacons = 2)
+      assert(warnings.exists(_.startsWith("MinHash LSH hot-bucket narrowing was live:")), warnings.toString)
+    } finally pw.close()
+  }
+
   test("append: new shingle sets extend the index, duplicate sets only add members") {
     val (corpus, batch) = split(allDocs)
     val path = Files.createTempDirectory("graft_mhstore_app").toString + "/store"

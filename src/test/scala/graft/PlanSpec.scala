@@ -315,6 +315,36 @@ class PlanSpec extends SparkSpec {
       s"winner election must pre-aggregate map-side (hot boilerplate keys):\n$plan")
   }
 
+  test("hot short-circuit: minHashPairs / hammingPairs plan the hot subtree only when a bucket exceeds maxBucket") {
+    // the hasHot probe leaves the hot join(s) out of the plan when no bucket
+    // is over the cap; a skeleton that dropped the probe would still return
+    // the same pairs, so only the plan shows it
+    import spark.implicits._
+    import graft.dedup.Dedup
+    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi"
+    val docs = (0 until 12).map(i => (i.toLong + 1, s"$base extra$i tail$i")).toDF("doc_id", "text")
+    def minhash(cap: Int) =
+      executedPlan(Dedup.minHashPairs(docs, col("text"), col("doc_id"), threshold = 0.3, maxBucket = cap))
+    val mhCold = minhash(1000)
+    assert(!mhCold.contains("Window") && !mhCold.contains("graft.minhash.hot,"),
+      s"no bucket over the cap: no hot sample window, no hot beacon:\n$mhCold")
+    val mhHot = minhash(1)
+    assert(mhHot.contains("Window") && mhHot.contains("graft.minhash.hot,"),
+      s"hot buckets: the sample window and the hot beacon are planned:\n$mhHot")
+
+    // two exact-dup clusters one bit apart share their upper 32-bit band
+    val sigs = (0 until 60).map { i =>
+      (i.toLong + 1, Seq(0x0123456789abcdefL, 0x0123456789abcdeeL, 0x7ea5a5a5a5a5a5a5L)(i % 3))
+    }.toDF("id", "sig")
+    def hamming(cap: Int) =
+      executedPlan(Dedup.hammingPairs(sigs, col("sig"), col("id"), maxHamming = 1, bands = 2, maxBucket = cap))
+    // banded is a checkpoint, so the only Generate left is the hot sub-band explode
+    val hmCold = hamming(10000)
+    assert(!hmCold.contains("Generate"), s"no bucket over the cap: no interleaved sub-bands:\n$hmCold")
+    val hmHot = hamming(1)
+    assert(hmHot.contains("Generate"), s"hot buckets: the interleaved sub-band split is planned:\n$hmHot")
+  }
+
   test("curation pipeline: each stage materialized once — the final plan reads NO parquet") {
     // the composed pipeline must not let Catalyst inline the whole chain
     // into every downstream self-join (line dedup reads its input 3x, the
