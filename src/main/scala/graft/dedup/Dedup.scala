@@ -59,7 +59,7 @@ object Dedup {
   /** Exact Jaccard of two SORTED distinct long arrays — primitive merge.
     * The reference implementation the specs pin [[jaccardCol]]'s
     * arithmetic against. */
-  private[dedup] def jaccardLong(a: Seq[Long], b: Seq[Long]): Double = {
+  private[graft] def jaccardLong(a: Seq[Long], b: Seq[Long]): Double = {
     var i = 0; var j = 0; var inter = 0
     val na = a.length; val nb = b.length
     while (i < na && j < nb) {

@@ -11,6 +11,9 @@ import org.apache.spark.sql.functions._
   */
 object ColumnStats {
 
+  /** Exact-distinct jobs `profile` keeps in flight at once. */
+  private val ExactDistinctJobs = 3
+
   final case class ColStat(
       column: String,
       count: Long,
@@ -22,10 +25,12 @@ object ColumnStats {
 
   /** Per-column profile card. Default (approx) mode is ONE wide
     * aggregation pass; `exactDistinct = true` additionally runs one exact
-    * two-phase countDistinct job PER column, concurrently with the base
-    * agg (k+1 independent jobs — not a single-snapshot read: on a source
-    * mutating between jobs the counts can disagree; profile over a
-    * consistent snapshot, as all engine callers do). */
+    * two-phase countDistinct job PER column, at most 3 at a time,
+    * concurrently with the base agg (k+1 independent jobs — not a
+    * single-snapshot read: on a source mutating between jobs the counts can
+    * disagree; profile over a consistent snapshot, as all engine callers
+    * do). The first failing job cancels the others, and its error is
+    * rethrown once every job has ended. */
   def profile(df: DataFrame, cols: Seq[String], exactDistinct: Boolean = false): DataFrame = {
     val aggs: Seq[Column] = cols.flatMap { c =>
       val isNumeric = df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
@@ -44,21 +49,34 @@ object ColumnStats {
     // Expand — k+1 copies of every input row through the first aggregation
     // (the multi-distinct rewrite). Run each column's exact distinct as its
     // OWN two-phase agg instead (no Expand; the scan is pruned to that one
-    // column), submitted CONCURRENTLY with the base agg from driver futures
-    // (guide §2.6: actions are only sequential because the driver calls
-    // them sequentially). Same exact results, ~k× less pre-shuffle volume.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val distinctF: Seq[Future[Long]] =
-      if (!exactDistinct) Nil
-      else cols.map(c => Future(df.select(col(c)).agg(countDistinct(col(c))).head().getLong(0)))
-    val rowF = Future(wide.collect()(0))
-    // melt to long format driver-side (one row collected)
-    val row = Await.result(rowF, Duration.Inf)
-    val dcounts: Map[String, Long] =
-      if (!exactDistinct) Map.empty
-      else cols.zip(distinctF.map(Await.result(_, Duration.Inf))).toMap
+    // column), on a pool this call owns, while the calling thread runs the
+    // base agg (guide §2.6: actions are only sequential because the driver
+    // calls them sequentially). Same exact results, ~k× less pre-shuffle volume.
+    val sc = df.sparkSession.sparkContext
+    val tag = s"graft-profile-${java.util.UUID.randomUUID()}"
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    def job[T](body: => T): Option[T] =
+      if (failure.get != null) None
+      else {
+        sc.addJobTag(tag)
+        try Some(body)
+        catch {
+          case e: Throwable =>
+            if (failure.compareAndSet(null, e)) sc.cancelJobsWithTag(tag)
+            None
+        } finally sc.removeJobTag(tag)
+      }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(ExactDistinctJobs)
+    val (base, distinct) =
+      try {
+        val futures = if (!exactDistinct) Nil else cols.map { c =>
+          c -> pool.submit(() => job(df.select(col(c)).agg(countDistinct(col(c))).head().getLong(0)))
+        }
+        val row = job(wide.collect()(0)) // melt to long format driver-side (one row collected)
+        (row, futures.map { case (c, f) => c -> f.get() }.toMap)
+      } finally pool.shutdown()
+    Option(failure.get).foreach(e => throw e)
+    val row = base.get
     val spark = df.sparkSession
     import spark.implicits._
     cols.map { c =>
@@ -66,7 +84,7 @@ object ColumnStats {
         c,
         row.getAs[Long](s"${c}__count"),
         row.getAs[Long](s"${c}__nulls"),
-        if (exactDistinct) dcounts(c) else row.getAs[Long](s"${c}__distinct"),
+        if (exactDistinct) distinct(c).get else row.getAs[Long](s"${c}__distinct"),
         Option(row.getAs[Any](s"${c}__min")).map(_.asInstanceOf[Double]),
         Option(row.getAs[Any](s"${c}__max")).map(_.asInstanceOf[Double])
       )

@@ -534,11 +534,14 @@ object TextOps {
   ): DataFrame = {
     require(vocabSize >= 1, s"vocabSize must be positive: $vocabSize")
     import org.apache.spark.sql.expressions.Window
+    // top-k first, rank after: `tok` is unique after the groupBy, so the
+    // ranks of the top `vocabSize` rows are the full ranking's, and the
+    // single-partition window sees at most `vocabSize` rows
+    val byRank = Seq(col("c").desc, col("tok"))
     val vocab = ref.select(explode(tokens(refText)).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
-      .withColumn("tid",
-        row_number().over(Window.orderBy(col("c").desc, col("tok"))).cast("long"))
-      .filter(col("tid") <= vocabSize)
+      .orderBy(byRank: _*).limit(vocabSize)
+      .withColumn("tid", row_number().over(Window.orderBy(byRank: _*)).cast("long"))
       .select("tok", "tid")
     docs.select(id.cast("long").as("id"), posexplode(tokens(text)).as(Seq("pos", "tok")))
       .join(vocab, Seq("tok"), "left")

@@ -283,22 +283,10 @@ class AnnStoreSpec extends SparkSpec {
     val sigs = (mega ++ others).toDF("id", "sig")
     val queries = Seq((0L, base), (9999L, base), (20000L, base ^ 1L)).toDF("id", "sig")
 
-    @volatile var sigPairs: Option[Long] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.get("graft.hammingknn.cand").foreach(row => sigPairs = Some(row.getLong(0)))
-      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val got =
-      try {
-        val r = Ann.hammingKnnJoin(queries, col("sig"), col("id"), sigs, col("sig"), col("id"),
-          k = 5, bands = 4, maxDistance = 3)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3))).sorted.toSeq
-        val deadline = System.currentTimeMillis() + 15000
-        while (sigPairs.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
-        r
-      } finally spark.listenerManager.unregister(listener)
+    val (rows, observed) = collectObserved(Ann.hammingKnnJoin(queries, col("sig"), col("id"), sigs, col("sig"),
+      col("id"), k = 5, bands = 4, maxDistance = 3))
+    val got = rows.map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3))).sorted.toSeq
+    val sigPairs = observed.flatMap(_.get("graft.hammingknn.cand")).map(_.getLong(0))
 
     // exactness under skew: brute force over the 10 030 rows
     val all = (mega ++ others)

@@ -426,6 +426,23 @@ class PlanSpec extends SparkSpec {
       assert(plan.contains("partial_count") || plan.contains("partial count"),
         s"count tables must map-side combine:\n$plan")
     }
+    // the vocabulary rank window is single-partition: it may only ever see
+    // the top-vocabSize rows, cut by a top-k below it. The operator makes
+    // that cut itself — the optimizer's own row_number()-filter-to-top-k
+    // inference is excluded in an isolated session so it cannot supply it
+    val iso = spark.newSession()
+    iso.conf.set("spark.sql.optimizer.excludedRules",
+      "org.apache.spark.sql.catalyst.optimizer.InferWindowGroupLimit")
+    val isoDocs = iso.createDataFrame(docs.collectAsList(), docs.schema)
+    val sp = graft.text.TextOps.tokenIds(isoDocs, col("text"), col("doc_id"),
+      isoDocs.filter(col("doc_id") % 2 === 0), col("text"), 5).queryExecution.sparkPlan
+    val windows = sp.collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }
+    assert(windows.size == 1, s"tokenIds ranks with ONE window:\n$sp")
+    val cut = windows.head.child.collectFirst {
+      case t: org.apache.spark.sql.execution.TakeOrderedAndProjectExec => t.limit
+      case l: org.apache.spark.sql.execution.GlobalLimitExec => l.limit
+    }
+    assert(cut.exists(_ <= 5), s"rank window must sit above a top-5 cut, got $cut:\n$sp")
   }
 
   test("aspectBucketCounts plan: reads ONLY w,h (bytes pruned), one scan, one tiny agg exchange") {

@@ -237,19 +237,10 @@ class TextDedupSpec extends SparkSpec {
     assert(hot.toSet.subsetOf(full.toSet))
 
     // the beacon: hot_rows > 0 whenever the narrowing was live
-    @volatile var hotRows: Option[Long] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.get("graft.minhash.hot").foreach(row => hotRows = Some(row.getLong(0)))
-      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      Dedup.minHashPairs(df, col("text"), col("doc_id"), threshold = 0.3, maxBucket = 1).collect()
-      val deadline = System.currentTimeMillis() + 15000
-      while (hotRows.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
-      assert(hotRows.exists(_ > 0), s"hot-bucket observation must fire, got $hotRows")
-    } finally spark.listenerManager.unregister(listener)
+    val (_, observed) = collectObserved(
+      Dedup.minHashPairs(df, col("text"), col("doc_id"), threshold = 0.3, maxBucket = 1))
+    val hotRows = observed.flatMap(_.get("graft.minhash.hot")).map(_.getLong(0))
+    assert(hotRows.exists(_ > 0), s"hot-bucket observation must fire, got $hotRows (metrics $observed)")
   }
 
   test("minHashPairs hot sample recovers hot-band-only pairs and measures the loss (graft.minhash.hotrecall)") {
@@ -269,24 +260,16 @@ class TextDedupSpec extends SparkSpec {
     val narrowed = run(1, 1)
     assume(narrowed.size < full.size, "fixture must have hot-band-only pairs for the recovery to matter")
 
-    @volatile var recovered: Option[(Long, Long)] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.get("graft.minhash.hotrecall").foreach(row => recovered = Some((row.getLong(0), row.getLong(1))))
-      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      // sample covers every hot bucket entirely → full single-band recall
-      val sampled = run(1, 12)
-      assert(sampled == full, "a bucket-covering sample must restore full recall")
-      val deadline = System.currentTimeMillis() + 15000
-      while (recovered.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
-      // hot_recovered = verified pairs found ONLY via the sample = the loss
-      assert(recovered.exists(_._1 == (full.size - narrowed.size).toLong),
-        s"hot_recovered must equal the measured prefix-path loss (${full.size - narrowed.size}), got $recovered")
-      assert(recovered.exists(_._2 == full.size.toLong))
-    } finally spark.listenerManager.unregister(listener)
+    // sample covers every hot bucket entirely → full single-band recall
+    val (rows, observed) = collectObserved(Dedup
+      .minHashPairs(df, col("text"), col("doc_id"), threshold = 0.3, maxBucket = 1, hotSample = 12))
+    val sampled = rows.map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(sampled == full, "a bucket-covering sample must restore full recall")
+    val recovered = observed.flatMap(_.get("graft.minhash.hotrecall")).map(r => (r.getLong(0), r.getLong(1)))
+    // hot_recovered = verified pairs found ONLY via the sample = the loss
+    assert(recovered.exists(_._1 == (full.size - narrowed.size).toLong),
+      s"hot_recovered must equal the measured prefix-path loss (${full.size - narrowed.size}), got $recovered")
+    assert(recovered.exists(_._2 == full.size.toLong))
   }
 
   test("fingerprint is whitespace/case-insensitive-normalised and stable") {
@@ -325,6 +308,30 @@ class TextDedupSpec extends SparkSpec {
     assert(r("v").getLong(3) == 2) // distinct
     assert(r("v").getDouble(4) == 2.0 && r("v").getDouble(5) == 8.0)
     assert(r("id").getLong(1) == 3)
+  }
+
+  test("column stats profile: a failing column cancels the other jobs, rethrows its own error, leaves none running") {
+    val boom = udf { (x: Long) => if (x >= 0L) throw new IllegalStateException("profile-boom") else x }
+    val slow = udf { (x: Long) => TextDedupSpec.slowCalls.incrementAndGet(); Thread.sleep(50); x }
+    // each slow column's exact-distinct job makes 400 calls of 50 ms (40
+    // tasks of 0.5 s on 4 slots); the failing column comes first
+    val df = spark.range(0, 400, 1, 40)
+      .select(boom(col("id")).as("bad") +: (0 until 5).map(i => slow(col("id") + i).as(s"s$i")): _*)
+    val before = TextDedupSpec.slowCalls.get
+    val err = intercept[Exception](ColumnStats.profile(df, df.columns.toSeq, exactDistinct = true))
+    val during = TextDedupSpec.slowCalls.get - before
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(e => String.valueOf(e.getMessage).contains("profile-boom")),
+      s"the failing job's own error must surface, got $err")
+    assert(!err.isInstanceOf[java.util.concurrent.ExecutionException])
+    // the five slow distinct jobs alone make 2000 calls: far fewer means
+    // the first failure cancelled the rest
+    assert(during < 1000, s"$during slow calls: the other jobs ran on after the failure")
+    // a killed task may finish the rows it is on; after that, silence
+    Thread.sleep(2000)
+    val calls = TextDedupSpec.slowCalls.get
+    Thread.sleep(1500)
+    assert(TextDedupSpec.slowCalls.get == calls, "profile returned while its jobs were still running")
   }
 
   test("drift: identical distributions give PSI~0 and KS~0, shifted ones do not") {
@@ -1243,4 +1250,9 @@ class TextDedupSpec extends SparkSpec {
       ("s2", 0L, 1L, 0L, 1L),
       ("s3", 1L, 0L, 0L, 0L)))
   }
+}
+
+object TextDedupSpec {
+  /** Calls of the column-stats failure spec's slow UDF (tasks run in this JVM). */
+  val slowCalls = new java.util.concurrent.atomic.AtomicLong()
 }
