@@ -11,11 +11,11 @@ import graft.stats.Packing
   * worker.
   *
   * Construction: docs are packed into contiguous fixed-budget bins in
-  * global `order` ([[Packing.assignBins]] — the two-phase distributed
-  * prefix sum, never a single-partition window), then bins round-robin
-  * onto shards (`shard = bin % shards`) — bins are ~one budget of tokens
-  * each, so spreading them cyclically balances shard totals WITHOUT
-  * knowing the total bin count up front (a contiguous split,
+  * global `order` ([[Packing.assignBins]], whose prefix sum is the
+  * [[graft.stats.PrefixScan]], never a single-partition window), then
+  * bins round-robin onto shards (`shard = bin % shards`) — bins are ~one
+  * budget of tokens each, so spreading them cyclically balances shard
+  * totals WITHOUT knowing the total bin count up front (a contiguous split,
   * `bin / binsPerShard`, would need a second global count first; exact
   * equality holds when bin sizes are uniform, and the residual spread is
   * bounded by the per-bin size variance either way). Within a shard, rows
@@ -44,9 +44,9 @@ object ShardedSink {
     require(shards > 0, s"shards must be positive: $shards")
     val bins = Packing.assignBins(df, id, order, weight, budget)
     // materialized once (r6): the range-repartitioned write SAMPLES its
-    // input before shuffling it, so without the cut the two-phase
-    // prefix-sum plan under the join executed twice (sampling pass + real
-    // pass); 24 B/row, the same assignment a manifest records anyway
+    // input before shuffling it, so without the cut the PrefixScan plan
+    // under the join executed twice (sampling pass + real pass); 24 B/row,
+    // the same assignment a manifest records anyway
     val assignment = bins.select(
       col("id"), col("bin"), pmod(col("bin"), lit(shards.toLong)).as("shard"))
       .localCheckpoint(true)

@@ -61,45 +61,33 @@ object Drift {
     *
     * Scale shape: one groupBy(value) shuffle collapses BOTH sides onto the
     * distinct-value grid (map-side combinable counts); the CDF prefix sums
-    * over that grid use the same two-phase distributed scan as
-    * [[Packing.assignBins]] (range repartition + per-partition totals +
-    * driver offsets) — NEVER the single-partition Exchange Spark plans for
-    * a global sum().over() window. Driver traffic: 3 longs per partition.
-    * Overflow bound: k·n ≤ n1·n2 < 2^63 holds up to ~3e9 rows per side. */
+    * over that grid are the two-slot [[PrefixScan]] over the value, and
+    * each partition returns only its running max — NEVER the
+    * single-partition Exchange Spark plans for a global sum().over()
+    * window. Overflow bound: k·n ≤ n1·n2 < 2^63 holds up to ~3e9 rows per
+    * side. */
   def ksExact(a: DataFrame, ac: Column, b: DataFrame, bc: Column): DataFrame = {
-    val spark = a.sparkSession
     val u = a.select(ac.cast("double").as("_v")).na.drop
       .select(col("_v"), lit(1L).as("_c1"), lit(0L).as("_c2"))
       .unionAll(b.select(bc.cast("double").as("_v")).na.drop
         .select(col("_v"), lit(0L).as("_c1"), lit(1L).as("_c2")))
-    val p = spark.sessionState.conf.numShufflePartitions
-    // ROW CONTRACT below the .rdd drop: ordinals (_v=0, _c1=1, _c2=2)
-    val g = u.groupBy("_v")
-      .agg(sum("_c1").as("_c1"), sum("_c2").as("_c2"))
-      .repartitionByRange(p, col("_v"))
-      .sortWithinPartitions("_v")
-    val rdd = g.rdd
-    val partSums = rdd.mapPartitionsWithIndex { (i, it) =>
-      var s1 = 0L; var s2 = 0L
-      while (it.hasNext) { val r = it.next(); s1 += r.getLong(1); s2 += r.getLong(2) }
-      Iterator((i, s1, s2))
-    }.collect().sortBy(_._1)
-    val off1 = partSums.map(_._2).scanLeft(0L)(_ + _)
-    val off2 = partSums.map(_._3).scanLeft(0L)(_ + _)
-    val n1 = off1.last; val n2 = off2.last
+    val scan = PrefixScan(u.groupBy("_v").agg(sum("_c1").as("_c1"), sum("_c2").as("_c2")),
+        Seq(col("_v")), 2) { (r, acc) =>
+      acc(0) += r.getLong(1)
+      acc(1) += r.getLong(2)
+    }
+    val Array(n1, n2) = scan.totals
     require(n1 > 0 && n2 > 0, s"both sides must be non-empty: n1=$n1 n2=$n2")
-    val bc1 = spark.sparkContext.broadcast(off1)
-    val bc2 = spark.sparkContext.broadcast(off2)
-    val ksNum = rdd.mapPartitionsWithIndex { (i, it) =>
-      var k1 = bc1.value(i); var k2 = bc2.value(i); var m = 0L
+    val ksNum = scan.pass { (k, it) =>
+      var m = 0L
       while (it.hasNext) {
-        val r = it.next(); k1 += r.getLong(1); k2 += r.getLong(2)
-        val d = math.abs(k1 * n2 - k2 * n1)
+        val r = it.next(); k(0) += r.getLong(1); k(1) += r.getLong(2)
+        val d = math.abs(k(0) * n2 - k(1) * n1)
         if (d > m) m = d
       }
       Iterator(m)
     }.collect().max
-    import spark.implicits._
+    import a.sparkSession.implicits._
     Seq((ksNum, n1, n2)).toDF("ks_num", "n1", "n2")
   }
 

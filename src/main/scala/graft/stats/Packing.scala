@@ -8,26 +8,9 @@ import org.apache.spark.sql.functions._
   * sequences of ~budget tokens). The bin of a document is decided by the
   * EXACT prefix sum of weights before it: `bin = (sum of earlier weights)
   * div budget` — the greedy contiguous packing every data loader can
-  * reconstruct, and an ANSI-SQL window can oracle.
-  *
-  * The naive Spark expression — `sum(w).over(Window.orderBy(order))` with
-  * no partition key — collapses the whole table into ONE task (Spark emits
-  * a single-partition Exchange for a global window), which is the classic
-  * 100-TB scale killer. This implementation is the textbook two-phase
-  * distributed scan instead:
-  *
-  *  1. range-repartition + sort by the order column (one shuffle, the same
-  *     one any global sort pays),
-  *  2. per-partition weight totals — a tiny job over P values whose map
-  *     output is reused by step 3 (same shuffle dependency, nothing
-  *     recomputed),
-  *  3. driver turns the P totals into per-partition prefix OFFSETS
-  *     (exclusive scan over ≤ thousands of longs), and a second pass adds
-  *     the local running sum to the partition's offset.
-  *
-  * Every partition computes its rows' global prefix sums exactly, whatever
-  * the sampled range boundaries were — the output is a pure function of
-  * (order, weight, budget). */
+  * reconstruct, and an ANSI-SQL window can oracle. The prefix sum is the
+  * two-phase distributed [[PrefixScan]], never a single-partition global
+  * window, so the output is a pure function of (order, weight, budget). */
 object Packing {
 
   /** Returns (id, bin): `id` cast to long, `bin` = 0-based bin index under
@@ -36,49 +19,18 @@ object Packing {
     * `order` must be a TOTAL order (unique values, e.g. the doc id) — with
     * ties the prefix sum depends on tie placement; weights must be
     * non-null. */
-  def assignBins(
-      df: DataFrame,
-      id: Column,
-      order: Column,
-      weight: Column,
-      budget: Long,
-      partitions: Int = 0
-  ): DataFrame = {
+  def assignBins(df: DataFrame, id: Column, order: Column, weight: Column, budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive: $budget")
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions else spark.sessionState.conf.numShufflePartitions
-    // ROW CONTRACT: everything below the .rdd drop reads fields by ordinal —
-    // getLong(0)=_id, getLong(2)=_w. If this select list ever grows, the
-    // ordinals (and the Row(...) construction) must move with it.
-    val prepared = df
-      .select(id.cast("long").as("_id"), order.as("_o"), weight.cast("long").as("_w"))
-      .repartitionByRange(p, col("_o"))
-      .sortWithinPartitions("_o")
-    // keep ONE lineage so the second pass reuses the range shuffle's map
-    // output instead of re-shuffling
-    val rdd = prepared.rdd
-    val partSums: Array[Long] = rdd
-      .mapPartitionsWithIndex { (i, it) =>
-        var s = 0L
-        while (it.hasNext) s += it.next().getLong(2)
-        Iterator((i, s))
-      }
-      .collect()
-      .sortBy(_._1)
-      .map(_._2)
-    val offsets = partSums.scanLeft(0L)(_ + _) // exclusive prefix per partition
-    val bc = spark.sparkContext.broadcast(offsets)
-    val out = rdd.mapPartitionsWithIndex { (i, it) =>
-      var run = bc.value(i)
+    val scan = PrefixScan(
+      df.select(id.cast("long").as("_id"), order.as("_o"), weight.cast("long").as("_w")),
+      Seq(col("_o")), 1)((r, acc) => acc(0) += r.getLong(2))
+    scan.frame("id", "bin") { (off, it) =>
       it.map { r =>
-        val before = run
-        run += r.getLong(2)
+        val before = off(0)
+        off(0) += r.getLong(2)
         Row(r.getLong(0), before / budget)
       }
     }
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(out,
-      StructType(Seq(StructField("id", LongType, false), StructField("bin", LongType, false))))
   }
 
   /** Materialize packed bins into TRAINING SEQUENCES: one row per bin with

@@ -2,7 +2,6 @@ package graft.stats
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Exact distributed quantile bucketing — the population-quantile step of
   * corpus curation: length-decile data cards, CCNet-style head/middle/tail
@@ -22,58 +21,32 @@ object Quantiles {
     * total and deterministic on any partitioning. Output: (id, v, bucket).
     *
     * Why not `ntile(k) OVER (ORDER BY …)`: Spark plans the unpartitioned
-    * window as ONE task holding the whole corpus — the same trap
-    * [[Packing.assignBins]] measured at ~19× slower on 10× less data.
-    * This is instead the two-phase distributed rank shared with
-    * [[Drift.ksExact]] and `TextOps.zipfFit`: range-repartition by
-    * (v, id), sort within partitions, per-partition counts → driver
-    * offsets (P longs — the only driver traffic), then a second sorted
-    * pass emits rank and bucket. A hot value (every doc truncated to the
-    * same token budget) spreads across range partitions because the tie
-    * id is part of the range key — no single hot task, unlike a window
-    * partitioned by value.
+    * window as ONE task holding the whole corpus. The global rank is the
+    * row count of the [[PrefixScan]] over (v, id) instead. A hot value
+    * (every doc truncated to the same token budget) spreads across range
+    * partitions because the tie id is part of the range key — no single
+    * hot task, unlike a window partitioned by value.
     *
     * Values are exact longs (counts, fixed-point scores — the repo-wide
     * exactness discipline); null value or tie rows are dropped. Bucket
     * arithmetic is pure long division, so a SQL oracle (row_number window
     * + integer division) restates every assignment bit-for-bit. Overflow:
-    * rank·k < n·k needs n < 2^63/k — beyond 9e17 rows at k=10.
-    *
-    * ROW CONTRACT below the .rdd drop: ordinals (id=0, v=1). */
+    * rank·k < n·k needs n < 2^63/k — beyond 9e17 rows at k=10. */
   def exactBuckets(df: DataFrame, value: Column, tie: Column, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    val spark = df.sparkSession
-    val p = spark.sessionState.conf.numShufflePartitions
-    val g = df
-      .select(tie.cast("long").as("id"), value.cast("long").as("v"))
-      .na.drop
-      .repartitionByRange(p, col("v").asc, col("id").asc)
-      .sortWithinPartitions(col("v").asc, col("id").asc)
-    val rdd = g.rdd
-    val partCounts = rdd.mapPartitionsWithIndex { (i, it) =>
-      var c = 0L
-      while (it.hasNext) { it.next(); c += 1 }
-      Iterator((i, c))
-    }.collect().sortBy(_._1)
-    val off = partCounts.map(_._2).scanLeft(0L)(_ + _)
-    val n = off.last
+    val scan = PrefixScan(
+      df.select(tie.cast("long").as("id"), value.cast("long").as("v")).na.drop(),
+      Seq(col("v").asc, col("id").asc), 1)((_, acc) => acc(0) += 1)
+    val n = scan.totals(0)
     require(n > 0, "exactBuckets needs a non-empty input")
-    val bc = spark.sparkContext.broadcast(off)
     val kk = k.toLong
-    val rows = rdd.mapPartitionsWithIndex { (i, it) =>
-      var r = bc.value(i)
+    scan.frame("id", "v", "bucket") { (off, it) =>
       it.map { row =>
-        val bucket = r * kk / n
-        r += 1
+        val bucket = off(0) * kk / n
+        off(0) += 1
         Row(row.getLong(0), row.getLong(1), bucket)
       }
     }
-    spark.createDataFrame(
-      rows,
-      StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("v", LongType, nullable = false),
-        StructField("bucket", LongType, nullable = false))))
   }
 
   /** Per-STRATUM exact quantile buckets — [[exactBuckets]] partitioned by a
@@ -110,56 +83,34 @@ object Quantiles {
     * the tie key; integer arithmetic only).
     *
     * Why not `sum(w) OVER (ORDER BY score DESC)`: the same unpartitioned-
-    * window trap as [[exactBuckets]] — one task holds the corpus. This is
-    * the two-phase distributed prefix sum of [[Packing.assignBins]] run on
-    * the score order: range-repartition by (-score, id), per-partition
-    * weight totals → driver offsets (P longs), then a second sorted pass
-    * accumulates and cuts. Partitions whose offset already exceeds the
-    * budget short-circuit per row (cum > budget → skip) — Catalyst cannot
-    * prune them without knowing the offsets, but the per-row work is two
-    * long adds.
-    *
-    * ROW CONTRACT below the .rdd drop: ordinals (id=0, score=1, w=2). */
+    * window trap as [[exactBuckets]] — one task holds the corpus. The
+    * running weight is the [[PrefixScan]] over (score DESC, id). Partitions
+    * whose offset already exceeds the budget are skipped whole — Catalyst
+    * cannot prune them without knowing the offsets. Weights must be
+    * non-negative: a negative one would make that skip drop rows the
+    * cum <= budget rule keeps (and make the kept set partitioning-
+    * dependent), so it fails fast, naming the smallest weight. */
   def budgetFill(df: DataFrame, score: Column, weight: Column, tie: Column, budget: Long): DataFrame = {
     require(budget >= 0, s"budget must be >= 0: $budget")
-    val spark = df.sparkSession
-    val p = spark.sessionState.conf.numShufflePartitions
-    val g = df
-      .select(tie.cast("long").as("id"), score.cast("long").as("score"), weight.cast("long").as("w"))
-      .na.drop
-      .repartitionByRange(p, col("score").desc, col("id").asc)
-      .sortWithinPartitions(col("score").desc, col("id").asc)
-    val rdd = g.rdd
-    // min rides the same pass for free: a NEGATIVE weight would make the
-    // whole-partition short-circuit below drop rows the cum <= budget rule
-    // keeps (and make the kept set partitioning-dependent) — fail fast
-    val partSums = rdd.mapPartitionsWithIndex { (i, it) =>
-      var s = 0L
-      var mn = Long.MaxValue
-      while (it.hasNext) { val w = it.next().getLong(2); s += w; if (w < mn) mn = w }
-      Iterator((i, s, mn))
-    }.collect().sortBy(_._1)
-    val minW = partSums.map(_._3).foldLeft(Long.MaxValue)(math.min)
-    require(partSums.isEmpty || minW >= 0L,
+    // slot 0: the weight total; slot 1: the partition's smallest weight, if below 0
+    val scan = PrefixScan(
+      df.select(tie.cast("long").as("id"), score.cast("long").as("score"), weight.cast("long").as("w")).na.drop(),
+      Seq(col("score").desc, col("id").asc), 2) { (r, acc) =>
+      val w = r.getLong(2)
+      acc(0) += w
+      if (w < acc(1)) acc(1) = w
+    }
+    val minW = scan.partitionTotals.foldLeft(0L)((m, t) => math.min(m, t(1)))
+    require(minW >= 0L,
       s"budgetFill: negative weight $minW — the greedy cum <= budget rule is only " +
         "defined for non-negative weights")
-    val off = partSums.map(_._2).scanLeft(0L)(_ + _)
-    val bc = spark.sparkContext.broadcast(off)
-    val rows = rdd.mapPartitionsWithIndex { (i, it) =>
-      var cum = bc.value(i)
-      if (cum > budget) Iterator.empty // whole partition past the cut
+    scan.frame("id", "score", "w", "cum") { (off, it) =>
+      if (off(0) > budget) Iterator.empty // whole partition past the cut
       else it.flatMap { row =>
-        cum += row.getLong(2)
-        if (cum <= budget) Some(Row(row.getLong(0), row.getLong(1), row.getLong(2), cum))
+        off(0) += row.getLong(2)
+        if (off(0) <= budget) Some(Row(row.getLong(0), row.getLong(1), row.getLong(2), off(0)))
         else None
       }
     }
-    spark.createDataFrame(
-      rows,
-      StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("score", LongType, nullable = false),
-        StructField("w", LongType, nullable = false),
-        StructField("cum", LongType, nullable = false))))
   }
 }

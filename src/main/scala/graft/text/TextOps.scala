@@ -1134,56 +1134,41 @@ object TextOps {
     * (freq DESC, token ASC) order, 1-based and deterministic.
     *
     * Scale shape: one map-side-combined token count builds the vocabulary
-    * table, then the global rank comes from the SAME two-phase prefix scan
-    * as [[graft.stats.Drift.ksExact]] — range-repartition on the rank key,
-    * per-partition counts collected (ONE bounded driver action of
-    * numPartitions longs), offsets broadcast back, each partition numbers
-    * its rows locally. No single-partition global window anywhere (the
+    * table, then the global rank is the row count of the
+    * [[graft.stats.PrefixScan]] over (freq DESC, token ASC); each partition
+    * returns its least-squares partial sums, added up on the driver in
+    * partition order. No single-partition global window anywhere (the
     * freq-partitioned-window alternative dies on the freq=1 long tail,
     * which holds most of any real vocabulary). Output is ONE row:
     * (vocab, tokens, slope, intercept), slope/intercept from the explicit
     * sum formula so a SQL oracle restates it verbatim. */
   def zipfFit(docs: DataFrame, text: Column): DataFrame = {
-    val spark = docs.sparkSession
     val freq = docs
       .filter(trim(text) =!= "")
       .select(explode(tokens(text)).as("t"))
       .groupBy("t").agg(count(lit(1)).as("f"))
-    val p = spark.sessionState.conf.numShufflePartitions
-    // ROW CONTRACT below the .rdd drop: ordinals (t=0, f=1)
-    val g = freq
-      .repartitionByRange(p, col("f").desc, col("t").asc)
-      .sortWithinPartitions(col("f").desc, col("t").asc)
-    val rdd = g.rdd
-    val partCounts = rdd.mapPartitionsWithIndex { (i, it) =>
-      var c = 0L
-      while (it.hasNext) { it.next(); c += 1 }
-      Iterator((i, c))
-    }.collect().sortBy(_._1)
-    val off = partCounts.map(_._2).scanLeft(0L)(_ + _)
-    val bc = spark.sparkContext.broadcast(off)
-    val sums = rdd.mapPartitionsWithIndex { (i, it) =>
-      var r = bc.value(i)
-      var n = 0L; var tok = 0L
+    val scan = graft.stats.PrefixScan(freq, Seq(col("f").desc, col("t").asc), 2) { (r, acc) =>
+      acc(0) += 1
+      acc(1) += r.getLong(1)
+    }
+    val Array(n, tok) = scan.totals
+    require(n >= 2, s"zipfFit needs at least 2 vocabulary entries: $n")
+    val sums = scan.pass { (off, it) =>
+      var r = off(0)
       var sx = 0.0; var sy = 0.0; var sxy = 0.0; var sxx = 0.0
       while (it.hasNext) {
-        val row = it.next()
         r += 1
         val x = math.log(r.toDouble)
-        val y = math.log(row.getLong(1).toDouble)
-        n += 1; tok += row.getLong(1)
+        val y = math.log(it.next().getLong(1).toDouble)
         sx += x; sy += y; sxy += x * y; sxx += x * x
       }
-      Iterator((n, tok, sx, sy, sxy, sxx))
+      Iterator((sx, sy, sxy, sxx))
     }.collect()
-    val n = sums.map(_._1).sum
-    require(n >= 2, s"zipfFit needs at least 2 vocabulary entries: $n")
-    val tok = sums.map(_._2).sum
-    val sx = sums.map(_._3).sum; val sy = sums.map(_._4).sum
-    val sxy = sums.map(_._5).sum; val sxx = sums.map(_._6).sum
+    val sx = sums.map(_._1).sum; val sy = sums.map(_._2).sum
+    val sxy = sums.map(_._3).sum; val sxx = sums.map(_._4).sum
     val slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
     val intercept = (sy - slope * sx) / n
-    import spark.implicits._
+    import docs.sparkSession.implicits._
     Seq((n, tok, slope, intercept)).toDF("vocab", "tokens", "slope", "intercept")
   }
 

@@ -293,14 +293,19 @@ class PlanSpec extends SparkSpec {
   test("Packing.assignBins plan: the range shuffle, never a single-partition global window") {
     import spark.implicits._
     val df = (1L to 10000L).map(i => (i, i % 50 + 1)).toDF("id", "w")
-    val out = graft.stats.Packing.assignBins(df, col("id"), col("id"), col("w"), budget = 500L)
-    // the output is built from an RDD of per-partition scans — materialize
-    // and check the prepared frame's plan has NO SinglePartition exchange
-    // (the naive window plan would)
-    val plan = executedPlan(out)
-    assert(!plan.contains("SinglePartition"),
-      s"packing must not collapse to one partition:\n$plan")
-    assert(out.rdd.getNumPartitions > 1, "bin assignment must stay distributed")
+    // every PrefixScan user. The output is built from an RDD of
+    // per-partition scans, so its plan string stops at that RDD; the
+    // partition count is what a single-partition global window would fail
+    val outs = Seq(
+      "assignBins" -> graft.stats.Packing.assignBins(df, col("id"), col("id"), col("w"), budget = 500L),
+      "exactBuckets" -> graft.stats.Quantiles.exactBuckets(df, col("w"), col("id"), k = 10),
+      "budgetFill" -> graft.stats.Quantiles.budgetFill(df, col("w"), col("w"), col("id"), budget = 50000L))
+    for ((name, out) <- outs) {
+      val plan = executedPlan(out)
+      assert(!plan.contains("SinglePartition"),
+        s"$name must not collapse to one partition:\n$plan")
+      assert(out.rdd.getNumPartitions > 1, s"$name must stay distributed")
+    }
   }
 
   test("dedupLines plan: winner election is a partial-aggregated hash groupBy, joins are equi") {

@@ -73,4 +73,12 @@ class QuantilesSpec extends SparkSpec {
       .collect().map(_.getLong(2)).toSeq
     assert(zeroKept.forall(_ == 0L))
   }
+
+  test("budgetFill: a negative weight fails fast, naming the weight") {
+    val df = (1L to 500L).map(i => (i, i % 7, if (i == 321L) -5L else i % 11)).toDF("id", "s", "w")
+    val e = intercept[IllegalArgumentException] {
+      Quantiles.budgetFill(df.repartition(5), col("s"), col("w"), col("id"), 100L)
+    }
+    assert(e.getMessage.contains("negative weight -5"), e.getMessage)
+  }
 }

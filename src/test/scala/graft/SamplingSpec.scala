@@ -217,8 +217,11 @@ class SamplingSpec extends SparkSpec {
     }
     assert(got == expected)
     // a different input partitioning must not change a single assignment
-    val again = Packing.assignBins(df.repartition(3), col("id"), col("id"), col("w"), budget = 1000L, partitions = 7)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    val again = try {
+      Packing.assignBins(df.repartition(3), col("id"), col("id"), col("w"), budget = 1000L)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
     assert(again == expected)
   }
 
