@@ -1,6 +1,7 @@
 package graft.checks
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
@@ -15,18 +16,26 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   *  - composite violations get a distinct message naming the PK fields
   *    (custom_checks.py:126-140).
   *
-  * Scale design (the 100 TB path) — hash-prefilter, exact verify:
-  *  1. shuffle ONLY `xxhash64(key)` (8 bytes/row instead of the full —
-  *     possibly wide string — key) through a partial-aggregating groupBy;
-  *     map-side combine absorbs skewed keys (phash clusters) before the wire;
-  *  2. hashes with count>1 are duplicate CANDIDATES (true duplicates ∪ rare
-  *     64-bit collisions) — a tiny frame joined back (AQE picks broadcast);
-  *  3. exact first-occurrence-wins verification runs only on candidate rows:
-  *     null-safe groupBy on the true key, `min(row_number)` per group,
-  *     violations are rows with rowNumber > first.
-  *  Measured ~4× faster than grouping string keys directly; the full-width
-  *  key never crosses the wire. Hash collisions cannot create false
-  *  violations — step 3 re-groups by the real key.
+  * Scale design — hash prefilter, then one exact window:
+  *  1. [[candidateRows]]: count `xxhash64(key)` through a partial-aggregating
+  *     groupBy. Only the 8-byte hash and its count cross the wire; map-side
+  *     combine absorbs skewed keys (phash clusters) before the exchange.
+  *  2. Hashes with count > 1 are duplicate CANDIDATES (true duplicates ∪ rare
+  *     64-bit collisions). That tiny set is joined back to the rows as a
+  *     data-induced predicate. When the planner can size both sides (a
+  *     parquet scan, or a driver-parsed source built as a local relation)
+  *     the candidate side is broadcast and the base rows never shuffle. Only
+  *     when it cannot size them (an RDD of unknown size, or a candidate side
+  *     above the broadcast threshold, as at 100 TB) does the join shuffle the
+  *     base rows.
+  *  3. [[repeats]]: one `min(_rn) over Window.partitionBy(key)` on the
+  *     candidate rows; violations are the rows with `_rn > _first`. Window
+  *     partitions group null members together, so key equality is
+  *     null-safe, and hash collisions cannot create violations: the window
+  *     groups by the real key. Only candidate rows shuffle here.
+  *  The salted variant (`salts > 0`, see [[Skew]]) replaces step 3 with a
+  *  two-phase aggregate joined back null-safely, for keys so hot that one
+  *  window partition would overwhelm a task.
   */
 object UniquenessCheck {
 
@@ -60,22 +69,9 @@ object UniquenessCheck {
       .filter(notAllNull)
       .select(keyCols.map(col) ++ Seq(rn, pid, keyHash, RowChecks.rowPayload(payloadCols).as("row")): _*)
 
-    val candidates = candidateRows(base, salts)
-
-    // exact verification on the (tiny) candidate set — null-safe key equality
-    val firstsAgg =
-      if (salts > 0) Skew.saltedGroupStats(candidates, keyCols, col("_rn"), salts)
-      else
-        candidates
-          .groupBy(keyCols.map(col): _*)
-          .agg(count(lit(1)).as("_cnt"), min(col("_rn")).as("_first"))
-    val firsts = firstsAgg
-      .filter(col("_cnt") > 1)
-      .select(keyCols.map(c => col(c).as(s"_k_$c")) :+ col("_first"): _*)
-    val joinCond = keyCols.map(c => candidates(c) <=> firsts(s"_k_$c")).reduce(_ && _)
-    val dupRows = candidates
-      .join(firsts, joinCond, "inner")
-      .filter(col("_rn") > col("_first"))
+    val dupRows =
+      if (salts > 0) saltedRepeats(candidateRows(base, salts), keyCols, salts)
+      else repeats(candidateRows(base), keyCols)
 
     val composite = primaryKeyFields.nonEmpty && keyCols.size > 1
     val msg =
@@ -106,10 +102,10 @@ object UniquenessCheck {
     )
   }
 
-  /** Hash-prefilter: rows whose `_kh` occurs more than once. The 8-byte hash
-    * is all that shuffles; the candidate-hash set is joined back (broadcast
-    * under AQE in the common tiny case). */
-  private def candidateRows(base: DataFrame, salts: Int = 0): DataFrame = {
+  /** Hash prefilter: rows whose `_kh` occurs more than once. The 8-byte hash
+    * and its count are all that shuffle; the candidate-hash set is joined
+    * back (broadcast when the planner can size it). */
+  private[checks] def candidateRows(base: DataFrame, salts: Int = 0): DataFrame = {
     val counted =
       if (salts > 0)
         Skew.saltedGroupStats(base, Seq("_kh"), col("_rn"), salts).withColumnRenamed("_cnt", "_hc")
@@ -118,10 +114,32 @@ object UniquenessCheck {
     base.join(candHashes, "_kh")
   }
 
+  /** The exact step: every candidate row that repeats an earlier row of the
+    * same (null-safe) key, with `_first` the key's first row number. One
+    * window partitioned by the real key, so rows that only share a hash stay
+    * apart. */
+  private[checks] def repeats(candidates: DataFrame, keyCols: Seq[String]): DataFrame =
+    candidates
+      .withColumn("_first", min(col("_rn")).over(Window.partitionBy(keyCols.map(col): _*)))
+      .filter(col("_rn") > col("_first"))
+
+  /** [[repeats]] for extreme per-key skew: per-key (count, first) in two
+    * salted aggregation phases, joined back on null-safe key equality. */
+  private def saltedRepeats(candidates: DataFrame, keyCols: Seq[String], salts: Int): DataFrame = {
+    val firsts = Skew
+      .saltedGroupStats(candidates, keyCols, col("_rn"), salts)
+      .filter(col("_cnt") > 1)
+      .select(keyCols.map(c => col(c).as(s"_k_$c")) :+ col("_first"): _*)
+    val joinCond = keyCols.map(c => candidates(c) <=> firsts(s"_k_$c")).reduce(_ && _)
+    candidates
+      .join(firsts, joinCond, "inner")
+      .filter(col("_rn") > col("_first"))
+  }
+
   /** duplicate-row (custom_checks.py:467-478): exact duplicate of an earlier
-    * row; message cites the earlier row-number. Same hash-prefilter shape:
-    * shuffle xxhash64 of the whole row, exact-verify candidates on the full
-    * tuple. */
+    * row; message cites the earlier row-number. Same shape as [[violations]]:
+    * count xxhash64 of the whole row, then the one exact window over the
+    * candidates on the full tuple. */
   def duplicateRows(
       df: DataFrame,
       payloadCols: Seq[String],
@@ -133,16 +151,7 @@ object UniquenessCheck {
     val pid = partitionId.getOrElse(lit(null)).cast(IntegerType).as("_pid")
     val rowHash = xxhash64(cols.map(col): _*).as("_kh")
     val base = df.select(cols.map(col) ++ Seq(rn, pid, rowHash): _*)
-    val candidates = candidateRows(base)
-    val firsts = candidates
-      .groupBy(cols.map(col): _*)
-      .agg(count(lit(1)).as("_cnt"), min(col("_rn")).as("_first"))
-      .filter(col("_cnt") > 1)
-      .select(cols.map(c => col(c).as(s"_k_$c")) :+ col("_first"): _*)
-    val joinCond = cols.map(c => candidates(c) <=> firsts(s"_k_$c")).reduce(_ && _)
-    candidates
-      .join(firsts, joinCond, "inner")
-      .filter(col("_rn") > col("_first"))
+    repeats(candidateRows(base), cols)
       .select(
         lit("duplicate-row").as("code"),
         col("_rn").as("row_number"),

@@ -16,8 +16,9 @@ import graft.schema._
   *  - header checks: driver-side metadata diffs, zero jobs;
   *  - every row-scoped check: ONE projection over ONE scan (whole-stage
   *    codegen), producing a violations frame via array+filter+explode;
-  *  - uniqueness / duplicate-row: partial-agg shuffle + (AQE-broadcast) join
-  *    back — skew-robust, see [[UniquenessCheck]];
+  *  - uniqueness / duplicate-row: partial-agg shuffle of an 8-byte hash, the
+  *    candidate hashes broadcast back, one exact window over the candidates
+  *    — skew-robust, see [[UniquenessCheck]];
   *  - foreign keys: left anti joins, broadcast for small dims;
   *  - the violations of all checks are unioned lazily — nothing materialises
   *    until the caller aggregates or collects, so Catalyst can share the scan.

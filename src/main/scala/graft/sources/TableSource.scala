@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -114,8 +116,7 @@ object TableSource {
       Row.fromSeq(cells.padTo(arity, null).take(arity) :+ rowNum)
     }
     val schema = StructType(headers.map(h => StructField(h, StringType)) :+ StructField("_row_number", LongType))
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows.toList), schema)
-    Right(CsvTable(df, headers, viols.result()))
+    Right(CsvTable(localFrame(spark, rows, schema), headers, viols.result()))
   }
 
   /** JSON reader: array-of-objects → DataFrame. A GeoJSON FeatureCollection
@@ -171,6 +172,31 @@ object TableSource {
     val outSchema = StructType(
       StructField("_c0", StringType) +: rows.indices.map(i => StructField(s"_c${i + 1}", StringType))
     )
-    spark.createDataFrame(spark.sparkContext.parallelize(transposed.toList), outSchema)
+    localFrame(spark, transposed, outSchema)
   }
+
+  /** A parsed sheet grid (XLSX, shapefile DBF) as a table: row 1 is the
+    * header, every row is padded to the widest one, a null header cell
+    * becomes `_c<i>`, and `_row_number` counts from 2 (header = 1). */
+  private[sources] def gridTable(spark: SparkSession, grid: IndexedSeq[IndexedSeq[String]]): CsvTable = {
+    val width = grid.iterator.map(_.length).maxOption.getOrElse(0)
+    val headers = grid.headOption.getOrElse(IndexedSeq.empty).padTo(width, null: String)
+    val rows = grid.iterator.zipWithIndex.drop(1).map { case (cells, idx) =>
+      Row.fromSeq(cells.padTo(width, null: String) :+ (idx + 1L))
+    }.toList
+    val schema = StructType(
+      headers.zipWithIndex.map { case (h, i) =>
+        StructField(Option(h).getOrElse(s"_c$i"), StringType)
+      } :+ StructField("_row_number", LongType)
+    )
+    CsvTable(localFrame(spark, rows, schema), headers, Seq.empty)
+  }
+
+  /** A frame over rows the driver already holds (parsed CSV/XLSX/shapefile
+    * grids, transposes). It is a local relation with exact size statistics,
+    * not an RDD of unknown size, so the planner can broadcast a small join
+    * side computed from it (the uniqueness candidate hashes) instead of
+    * shuffling every row. */
+  private[sources] def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 }

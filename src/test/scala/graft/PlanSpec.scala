@@ -290,22 +290,66 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("*("), "the CASE threshold filter must run inside whole-stage codegen")
   }
 
+  /** Every shuffle dependency in an RDD's lineage, nearest first. */
+  private def shuffleDeps(rdd: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.ShuffleDependency[_, _, _]] =
+    rdd.dependencies.flatMap {
+      case s: org.apache.spark.ShuffleDependency[_, _, _] => s +: shuffleDeps(s.rdd)
+      case d                                            => shuffleDeps(d.rdd)
+    }
+
   test("Packing.assignBins plan: the range shuffle, never a single-partition global window") {
     import spark.implicits._
     val df = (1L to 10000L).map(i => (i, i % 50 + 1)).toDF("id", "w")
     // every PrefixScan user. The output is built from an RDD of
-    // per-partition scans, so its plan string stops at that RDD; the
-    // partition count is what a single-partition global window would fail
+    // per-partition scans, so its plan string stops at that RDD; the RDD
+    // lineage under it holds the shuffles a plan string cannot show
     val outs = Seq(
       "assignBins" -> graft.stats.Packing.assignBins(df, col("id"), col("id"), col("w"), budget = 500L),
       "exactBuckets" -> graft.stats.Quantiles.exactBuckets(df, col("w"), col("id"), k = 10),
       "budgetFill" -> graft.stats.Quantiles.budgetFill(df, col("w"), col("w"), col("id"), budget = 50000L))
     for ((name, out) <- outs) {
-      val plan = executedPlan(out)
-      assert(!plan.contains("SinglePartition"),
-        s"$name must not collapse to one partition:\n$plan")
+      val deps = shuffleDeps(out.rdd)
+      assert(deps.nonEmpty, s"$name must range-partition its input")
+      assert(deps.forall(_.partitioner.numPartitions > 1),
+        s"$name must not collapse to one partition: ${deps.map(_.partitioner)}")
       assert(out.rdd.getNumPartitions > 1, s"$name must stay distributed")
     }
+  }
+
+  test("upload resource plan: candidate hashes broadcast, one window per exact step, codegen'd row checks") {
+    // a driver-parsed CSV with two unique columns and a composite PK: the
+    // local relation lets the planner size the base, so every candidate
+    // join broadcasts its hash side and no base row shuffles for it
+    val header = "id,email,region,code,score"
+    val lines = (1 to 1000).map(i => s"$i,u${i % 997}@x.org,r${i % 5},c${i % 200},${i % 90}")
+    val f = java.nio.file.Files.createTempDirectory("graft_upload").resolve("r.csv")
+    java.nio.file.Files.writeString(f, (header +: lines).mkString("\n"))
+    val csv = graft.sources.TableSource.readCsv(spark, f.toString).toOption.get
+    val schema = TableSchema(
+      Seq(
+        Field("id", constraints = fc.copy(unique = true)),
+        Field("email", constraints = fc.copy(unique = true, maxLength = Some(40))),
+        Field("region", constraints = fc.copy(required = true)),
+        Field("code"),
+        Field("score", ftype = "integer", constraints = fc.copy(maximum = Some(80)))
+      ),
+      primaryKey = Seq("region", "code")
+    )
+    val viols = ValidationRunner
+      .plan(csv.df, schema, ValidationConfig(rowNumberCol = "_row_number"), Some(org.apache.spark.sql.Observation()))
+      .violations
+    // join strategies as planned, before any stage runs
+    val plan = executedPlan(viols)
+    assert(!plan.contains("SortMergeJoin"), s"candidate joins must not sort-merge on _kh:\n$plan")
+    val joins = "(BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin|NestedLoopJoin|CartesianProduct)".r
+    assert(joins.findAllIn(plan).size == 3, s"one (candidate) join per uniqueness check, none in the exact steps:\n$plan")
+    assert("BroadcastHashJoin".r.findAllIn(plan).size == 3, plan)
+    assert("Window \\[".r.findAllIn(plan).size == 3, s"one exact window per uniqueness check:\n$plan")
+    // codegen stages exist only in the final adaptive plan
+    viols.collect()
+    val finalPlan = executedPlan(viols)
+    assert("\\*\\(\\d+\\) Filter[^\\n]*\\n[^\\n]*CollectMetrics[^\\n]*\\n[^\\n]*LocalTableScan".r.findFirstIn(finalPlan).nonEmpty,
+      s"the row-check filter must run codegen'd over the local scan:\n$finalPlan")
   }
 
   test("dedupLines plan: winner election is a partial-aggregated hash groupBy, joins are equi") {

@@ -74,6 +74,29 @@ class SourceSpec extends SparkSpec {
     assert(report.warnings.nonEmpty)
   }
 
+  test("CSV and XLSX readers build a sized local relation: the planner can broadcast against it") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val header = Seq("id", "name", "score")
+    val grid = (1 to 1000).map(i => Seq(i.toString, s"name$i", if (i % 7 == 0) "" else s"${i % 50}.5"))
+    val csvPath = writeTmp("local.csv", (header +: grid).map(_.mkString(",")).mkString("\n"))
+    val xlsxPath = Files.createTempDirectory("graft_src").resolve("local.xlsx").toString
+    graft.sources.XlsxSource.writeXlsx(xlsxPath, Seq("Sheet1" -> (header +: grid)))
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val expected = grid.zipWithIndex.map { case (cells, i) => (cells.map(c => if (c.isEmpty) null else c), i + 2L) }
+    for ((fmt, parsed) <- Seq(
+        "csv" -> TableSource.readCsv(spark, csvPath),
+        "xlsx" -> graft.sources.XlsxSource.readXlsx(spark, xlsxPath))) {
+      val df = parsed.toOption.get.df
+      assert(df.queryExecution.analyzed.isInstanceOf[LocalRelation], s"$fmt: ${df.queryExecution.analyzed}")
+      val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(size > 0 && size < threshold, s"$fmt: $size bytes must be below the broadcast threshold $threshold")
+      val got = df.collect().map(r => ((0 until 3).map(r.getString), r.getLong(3))).sortBy(_._2).toSeq
+      // the CSV reader keeps empty cells as "", the XLSX writer omits them
+      val norm = got.map { case (cells, rn) => (cells.map(c => if (c == null || c.isEmpty) null else c), rn) }
+      assert(norm == expected, fmt)
+    }
+  }
+
   test("json reader: array of objects, corrupt input is a source-error") {
     val good = writeTmp("ok.json", """[{"a": 1, "b": "x"}, {"a": 2, "b": "y"}]""")
     val df = TableSource.readJson(spark, good).toOption.get

@@ -84,6 +84,49 @@ class UniquenessSpec extends SparkSpec {
     assert(v(1)._2 == "Row 5 is duplicated to row(s) 2")
   }
 
+  test("composite PK with partly-null tuples: null members compare equal, all-null tuples skipped") {
+    val df = Seq[(Long, String, String)](
+      (2L, "a", null),
+      (3L, null, null),
+      (4L, "a", null),
+      (5L, null, null),
+      (6L, null, "a"),
+      (7L, "a", "a")
+    ).toDF("_rid", "p", "q")
+    val schema = TableSchema(Seq(Field("p"), Field("q")), primaryKey = Seq("p", "q"))
+    val v = viols(df, schema)
+    assert(v.map(r => (r._1, r._2)) == Seq((4L, "unique-constraint")))
+    assert(v.head._3.startsWith("Rows 4 have a composite uniqueness constraint violation"))
+  }
+
+  test("duplicate-row with null cells: nulls compare equal, each repeat cites the first row") {
+    val df = Seq[(Long, String, String)](
+      (2L, "a", null),
+      (3L, null, null),
+      (4L, "a", null),
+      (5L, null, "a"),
+      (6L, null, null),
+      (7L, "a", null)
+    ).toDF("_rid", "x", "y")
+    val schema = TableSchema(Seq(Field("x"), Field("y")))
+    val v = ValidationRunner
+      .plan(
+        df,
+        schema,
+        ValidationConfig(rowNumberCol = "_rid", options = ValidationOptions(checks = Seq("schema", "duplicate-row")))
+      )
+      .violations
+      .filter("code = 'duplicate-row'")
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(3)))
+      .sortBy(_._2)
+      .toSeq
+    assert(v == Seq(
+      ("duplicate-row", 4L, "Row 4 is duplicated to row(s) 2"),
+      ("duplicate-row", 6L, "Row 6 is duplicated to row(s) 3"),
+      ("duplicate-row", 7L, "Row 7 is duplicated to row(s) 2")))
+  }
+
   test("misleading unique errors dropped when PK column has required errors (jobs.py:545-569)") {
     val df = Seq((2L, Some("a")), (3L, None), (4L, Some("a"))).toDF("_rid", "k")
     val schema = TableSchema(
