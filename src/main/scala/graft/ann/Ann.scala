@@ -3,14 +3,14 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Approximate-nearest-neighbor search over an embedding column.
+/** Approximate-nearest-neighbor search over an embedding column. The
+  * probes and joins run on one skeleton, [[Knn]]: its scaladoc explains
+  * the shared steps (cell ranking, single-query and per-query top-k,
+  * probed-cell pruning).
   *
-  * Baseline: brute-force cosine top-k — a single scan computing the dot
-  * product natively (`zip_with` + `aggregate`, fully codegen'd) followed by
-  * `orderBy(desc).limit(k)`, which Spark executes as TakeOrderedAndProject:
-  * per-partition top-k heaps + a driver merge, NO global sort and NO shuffle
-  * of the vectors. That plan is already the right shape at 10^12 rows; the
-  * scan is the cost.
+  * Baseline: brute-force cosine top-k ([[Knn.cosineTopK]]) — one scan
+  * scored by the native `VectorExprs` dot/l2norm kernels. That plan is
+  * already the right shape at 10^12 rows; the scan is the cost.
   *
   * Scale path: random-hyperplane LSH — `numBits` sign bits against
   * deterministic pseudo-random hyperplanes form a bucket id; queries probe
@@ -20,11 +20,10 @@ import org.apache.spark.sql.functions._
   */
 object Ann {
 
-  /** Row-local vector kernels. Implemented as tight Scala UDFs over primitive
-    * loops: Catalyst's zip_with/aggregate higher-order functions are
-    * CodegenFallback (interpreted per element) — measured ~10× slower for
-    * dot products. The UDF is the whole per-row cost; everything around it
-    * (scan, top-k, joins) stays native. */
+  /** Scalar double loops: the reference the native `VectorExprs` kernels
+    * must match (through the UDF variants below), and the IVF
+    * normalization, assignment and cell ranking. The operators score with
+    * the native kernels ([[dot]], [[l2norm]]). */
   private[ann] def dotK(a: Seq[Double], b: Seq[Double]): Double = {
     var s = 0.0; var i = 0
     val n = math.min(a.length, b.length)
@@ -57,20 +56,11 @@ object Ann {
   private[graft] def cosineViaUdf(a: Column, b: Column): Column =
     cosineUdf(a.cast("array<double>"), b.cast("array<double>"))
 
-  /** Brute-force cosine top-k against a constant query vector. Output:
-    * (id, cosine) ordered descending, k rows. Executes as
-    * TakeOrderedAndProject (per-partition heaps, no shuffle of vectors). */
-  def bruteForceTopK(df: DataFrame, vec: Column, id: Column, query: Seq[Double], k: Int): DataFrame = {
-    val qn = math.sqrt(query.map(x => x * x).sum)
-    val q = array(query.map(lit): _*)
-    // null vectors score null, zero-norm vectors NaN; Spark orders NaN ABOVE
-    // every double — both would displace real neighbors at rank 1. Drop them.
-    // Fully codegen'd: score is the native dot/l2norm expression pair.
-    df.select(id.as("id"), (dot(vec, q) / (l2norm(vec) * lit(qn))).as("cosine"))
-      .filter(col("cosine").isNotNull && !isnan(col("cosine")))
-      .orderBy(col("cosine").desc, col("id"))
-      .limit(k)
-  }
+  /** Brute-force cosine top-k against a constant query vector
+    * ([[Knn.cosineTopK]] over every row). Output: (id, cosine) ordered
+    * descending, k rows. */
+  def bruteForceTopK(df: DataFrame, vec: Column, id: Column, query: Seq[Double], k: Int): DataFrame =
+    Knn.cosineTopK(df, id, vec, query, k)
 
   /** Deterministic pseudo-random hyperplanes: component h(i,d) derived from a
     * hash of (seed, i, d), mapped to [-1, 1). Reproducible across runs with
@@ -137,7 +127,7 @@ object Ann {
     * signatures within `probeHamming` of the query's, push their PREFIX set
     * into the partition filter (directory pruning — the scan never lists the
     * other buckets) and the exact signature set into a data filter, then
-    * brute-force cosine over the surviving candidates. */
+    * [[Knn.cosineTopK]] over the surviving candidates. */
   def lshTopKStored(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
@@ -148,23 +138,14 @@ object Ann {
       probeHamming: Int = 2,
       seed: Long = 42L
   ): DataFrame = {
-    val planes = hyperplanes(numBits, query.size, seed)
-    val qSig = planes.zipWithIndex.map { case (p, i) =>
-      val d = p.zip(query).map { case (a, b) => a * b }.sum
-      if (d >= 0) 1L << i else 0L
-    }.sum
-    val probes = sigsWithin(qSig, numBits, probeHamming)
+    val probes = sigsWithin(Knn.querySig(hyperplanes(numBits, query.size, seed), query),
+      numBits, probeHamming)
     val prefixes = probes.map(_ >>> (numBits - prefixBits)).distinct
-    val q = array(query.map(lit): _*)
-    val qn = math.sqrt(query.map(x => x * x).sum)
-    spark.read
+    val candidates = spark.read
       .parquet(path)
       .filter(col("sig_prefix").isin(prefixes: _*)) // partition pruning
       .filter(col("sig").isin(probes: _*))
-      .select(col("id"), (dot(col("embedding"), q) / (l2norm(col("embedding")) * lit(qn))).as("cosine"))
-      .filter(!isnan(col("cosine")))
-      .orderBy(col("cosine").desc, col("id"))
-      .limit(k)
+    Knn.cosineTopK(candidates, col("id"), col("embedding"), query, k)
   }
 
   /** Batch kNN JOIN: top-k store neighbors for EVERY row of a query
@@ -192,9 +173,9 @@ object Ann {
     *     `sig`, each distinct store vector crossing the wire once per
     *     matching probe;
     *  4. cosine on the surviving candidates (native codegen'd kernels),
-    *     per-query-vector top-k over the ≤ k member ids per candidate
-    *     group — 24 B per CANDIDATE group, not per store row;
-    *  5. the per-vector result fans back out to every query row carrying
+    *     then [[Knn.collapsedTopK]]: per-query-vector top-k over the ≤ k
+    *     member ids per candidate group — 24 B per CANDIDATE group, not
+    *     per store row — fanned back out to every query row carrying
     *     that vector.
     * A (query, candidate) pair can match at most one probe signature (a
     * store vector has ONE sig), so no candidate dedup is needed.
@@ -229,7 +210,6 @@ object Ann {
     val planes = hyperplanes(numBits, dim, seed)
     val nb = numBits; val ph = probeHamming
     val probesUdf = udf((sig: Long) => sigsWithin(sig, nb, ph).toArray)
-    import org.apache.spark.sql.expressions.Window
 
     // 1. collapse both sides to bit-identical-vector groups
     val qmembers = queries
@@ -244,12 +224,6 @@ object Ann {
     val smembers = store
       .select(col("id"), col("embedding"), col("sig"))
       .withColumn("_skey", xxhash64(col("embedding")))
-    val wVec = Window.partitionBy(col("_skey")).orderBy(col("id"))
-    val storeTopK = smembers
-      .select(col("_skey"), col("id"))
-      .withColumn("_sr", row_number().over(wVec))
-      .filter(col("_sr") <= k)
-      .drop("_sr")
     val sreps = smembers
       .groupBy(col("_skey"))
       .agg(min_by(struct(col("embedding"), col("sig")), col("id")).as("_r"))
@@ -265,17 +239,10 @@ object Ann {
         (dot(col("embedding"), col("_qv")) / (l2norm(col("embedding")) * col("_qn"))).as("cosine"))
       .filter(col("cosine").isNotNull && !isnan(col("cosine")))
 
-    // 4. per-query-vector top-k over the capped member expansion
-    val w = Window.partitionBy(col("_qkey")).orderBy(col("cosine").desc, col("id"))
-    val perVec = cand
-      .join(storeTopK, Seq("_skey"))
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= k)
-
-    // 5. fan the per-vector result out to every query row carrying it
-    perVec
-      .join(qmembers.select(col("_qkey"), col("qid")), Seq("_qkey"))
-      .select(col("qid"), col("id"), col("cosine"), col("_rk").as("rank"))
+    // 4-5. capped per-vector top-k, fanned out to the query rows
+    Knn.collapsedTopK(cand, smembers.select(col("_skey"), col("id")),
+        qmembers.select(col("_qkey"), col("qid")), "_qkey", "_skey", col("cosine").desc, k)
+      .select(col("qid"), col("id"), col("cosine"), col("rank"))
   }
 
   // --------------------------------------------------------------------
@@ -389,12 +356,11 @@ object Ann {
       .map(_.split(',').map(_.toDouble).toIndexedSeq)
       .toIndexedSeq
 
-  /** Top-k probe against a [[writeIvfBucketed]] store: rank cells by
-    * centroid·query on the driver (k dot products), push the nprobe nearest
-    * cell ids into the partition filter (directory pruning), brute-force
-    * cosine over the surviving candidates. Recall is governed by nprobe;
-    * nprobe == k degenerates to an exact (but still pruned-scan-shaped)
-    * search. */
+  /** Top-k probe against a [[writeIvfBucketed]] store: rank cells on the
+    * driver ([[Knn.cellsByDot]]), push the nprobe nearest cell ids into
+    * the partition filter (directory pruning), [[Knn.cosineTopK]] over the
+    * surviving candidates. Recall is governed by nprobe; nprobe == k
+    * degenerates to an exact (but still pruned-scan-shaped) search. */
   def ivfTopK(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
@@ -402,36 +368,23 @@ object Ann {
       k: Int,
       nprobe: Int = 4
   ): DataFrame = {
-    val centroids = readCentroids(path)
-    val qn0 = math.sqrt(query.map(x => x * x).sum)
-    require(qn0 > 0.0, "zero-norm query")
-    val qhat = query.map(_ / qn0).toIndexedSeq
-    val cells = centroids.zipWithIndex
-      .map { case (c, i) => (i, dotK(c, qhat)) }
-      .sortBy(-_._2)
-      .take(math.min(nprobe, centroids.size))
-      .map(_._1)
-    val q = array(query.map(lit): _*)
-    spark.read
+    val cells = Knn.cellsByDot(readCentroids(path), query, nprobe)
+    val candidates = spark.read
       .parquet(path)
-      .filter(col("cluster").isin(cells: _*)) // partition pruning
-      .select(col("id"), (dot(col("embedding"), q) / (l2norm(col("embedding")) * lit(qn0))).as("cosine"))
-      .filter(!isnan(col("cosine")))
-      .orderBy(col("cosine").desc, col("id"))
-      .limit(k)
+      .filter(col("cluster").isin(cells.toSeq: _*)) // partition pruning
+    Knn.cosineTopK(candidates, col("id"), col("embedding"), query, k)
   }
 
   /** Batch kNN JOIN against a [[writeIvfBucketed]] store — the IVF sibling
     * of [[knnJoin]]: each query row is assigned its `nprobe` nearest cells
-    * (a row-local kernel over the k unit centroids, broadcast as plain
-    * closure state), exploded, and equi-joined on the store's `cluster`
-    * partition column; cosine + per-query window top-k over candidates only.
-    * The probed cell set (bounded by the centroid count) is collected and
-    * pushed as an explicit `cluster IN (...)` partition filter on the store
-    * scan — static pruning that always fires, unlike DPP; with a small
-    * query batch AQE additionally broadcasts the probe side, and at 10M+
-    * queries both sides exchange on `cluster`. Recall is governed by nprobe
-    * exactly as in [[ivfTopK]] (nprobe == k cells is exact).
+    * ([[Knn.cellsByDot]] per row, the ranking [[ivfTopK]] runs on the
+    * driver; the k unit centroids ship as closure state), exploded, and
+    * equi-joined on the store's `cluster` partition column, which
+    * [[Knn.probedStore]] prunes to the probed cells; cosine +
+    * [[Knn.topK]] per query over candidates only. With a small query
+    * batch AQE additionally broadcasts the probe side, and at 10M+
+    * queries both sides exchange on `cluster`. Recall is governed by
+    * nprobe exactly as in [[ivfTopK]] (nprobe == k cells is exact).
     *
     * Output: (qid, id, cosine, rank), rank 1..k per qid.
     */
@@ -445,42 +398,20 @@ object Ann {
       nprobe: Int = 4
   ): DataFrame = {
     val centroids = readCentroids(path)
-    val np = math.min(nprobe, centroids.size)
-    // cell ranking by dot(v, c) — |v| is constant per row, so normalization
-    // cannot change the argmax ordering (centroids are unit vectors)
-    val cellsUdf = udf { (v: Seq[Double]) =>
-      centroids.indices
-        .map(c => (c, dotK(v, centroids(c))))
-        .sortBy(-_._2)
-        .take(np)
-        .map(_._1)
-        .toArray
-    }
+    val cellsUdf = udf((v: Seq[Double]) => Knn.cellsByDot(centroids, v, nprobe))
     val qside = queries
       .select(qid.as("qid"), qvec.cast("array<double>").as("_qv"))
       .withColumn("_qn", l2norm(col("_qv")))
       .filter(col("_qn") > 0.0)
       .withColumn("cluster", explode(cellsUdf(col("_qv"))))
-    // The probed cell set is bounded by the centroid count (already driver
-    // state), so collect it and push an EXPLICIT partition filter on the
-    // store scan — dynamic partition pruning is not guaranteed to fire, and
-    // an unpruned equi-join reads every cell directory. One extra cheap job
-    // (distinct over an int column of the query batch); asserted to reach
-    // PartitionFilters in AnnStoreSpec.
-    val probed = qside.select(col("cluster")).distinct().collect().map(_.getInt(0)).sorted
     val cand = qside
-      .join(spark.read.parquet(path).filter(col("cluster").isin(probed.map(Int.box).toSeq: _*)),
-        Seq("cluster"))
+      .join(Knn.probedStore(spark, path, qside), Seq("cluster"))
       .select(
         col("qid"), col("id"),
         (dot(col("embedding"), col("_qv")) / (l2norm(col("embedding")) * col("_qn"))).as("cosine"))
       .filter(col("cosine").isNotNull && !isnan(col("cosine")))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("id"))
-    cand
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= k)
-      .select(col("qid"), col("id"), col("cosine"), col("_rk").as("rank"))
+    Knn.topK(cand, "qid", Seq(col("cosine").desc, col("id")), k)
+      .select(col("qid"), col("id"), col("cosine"), col("rank"))
   }
 
   /** Batch kNN JOIN in Hamming space — the perceptual-hash sibling of
@@ -508,11 +439,11 @@ object Ann {
     *     guarantee Dedup.hammingPairs carries, which is why the brute-force
     *     bit_count cross join is an equality oracle (q47), not a recall bound;
     *  4. distinct (a pair can agree on several bands), codegen'd bit_count
-    *     distance, threshold filter, per-QUERY-SIGNATURE top-k over the ≤ k
-    *     member ids per candidate signature — 20 B per CANDIDATE signature
-    *     pair, never per store row;
-    *  5. the per-signature result fans back out to every query row carrying
-    *     that signature (membership join on the 8-byte signature).
+    *     distance, threshold filter, then [[Knn.collapsedTopK]]:
+    *     per-QUERY-SIGNATURE top-k over the ≤ k member ids per candidate
+    *     signature — 20 B per CANDIDATE signature pair, never per store
+    *     row — fanned back out to every query row carrying that signature
+    *     (membership join on the 8-byte signature).
     * Shuffle: `bands` 12-byte keys per DISTINCT signature on each side.
     * Candidate volume is surfaced as the `graft.hammingknn.cand`
     * observation (`sig_pairs` = surviving signature pairs) so skew handling
@@ -541,7 +472,6 @@ object Ann {
     val mask = if (width >= 64) -1L else (1L << width) - 1
     def bandVals(sig: Column): Column =
       array((0 until bands).map(b => shiftrightunsigned(sig, b * width).bitwiseAND(lit(mask))): _*)
-    import org.apache.spark.sql.expressions.Window
 
     // 1. collapse: distinct signatures only ever reach the banding join
     val qmembers = queries
@@ -551,11 +481,6 @@ object Ann {
     val smembers = store
       .select(sid.as("id"), ssig.as("_sig"))
       .filter(col("_sig").isNotNull)
-    val wSig = Window.partitionBy(col("_sig")).orderBy(col("id"))
-    val storeTopK = smembers
-      .withColumn("_sr", row_number().over(wSig))
-      .filter(col("_sr") <= k)
-      .drop("_sr")
     val ssigs = smembers.select(col("_sig")).distinct()
 
     // 2-3. band the distinct signatures, pigeonhole equi-join
@@ -571,21 +496,13 @@ object Ann {
       .distinct()
       .observe("graft.hammingknn.cand", count(lit(1)).as("sig_pairs"))
 
-    // 4. per-query-signature top-k over the capped member expansion
-    val w = Window.partitionBy(col("_qsig")).orderBy(col("distance"), col("id"))
-    val perSig = cand
-      .join(storeTopK, Seq("_sig"))
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= k)
-
-    // 5. fan the per-signature result out to every query row carrying it
-    perSig
-      .join(qmembers, Seq("_qsig"))
-      .select(col("qid"), col("id"), col("distance"), col("_rk").as("rank"))
+    // 4-5. capped per-signature top-k, fanned out to the query rows
+    Knn.collapsedTopK(cand, smembers, qmembers, "_qsig", "_sig", col("distance"), k)
+      .select(col("qid"), col("id"), col("distance"), col("rank"))
   }
 
   /** LSH-bucketed top-k: compute the query's bucket, scan only rows whose
-    * signature matches within `probeHamming` bits, brute-force inside.
+    * signature matches within `probeHamming` bits, [[Knn.cosineTopK]] inside.
     * Approximate: recall depends on numBits/probeHamming. Prefer
     * [[lshTopKStored]] — this variant still SCANS the full table (cheap
     * inner loop, full I/O); the stored variant prunes partitions. */
@@ -600,19 +517,10 @@ object Ann {
       seed: Long = 42L
   ): DataFrame = {
     val planes = hyperplanes(numBits, query.size, seed)
-    val qSig = planes.zipWithIndex.map { case (p, i) =>
-      val d = p.zip(query).map { case (a, b) => a * b }.sum
-      if (d >= 0) 1L << i else 0L
-    }.sum
-    val sig = lshSignature(vec, planes)
-    val q = array(query.map(lit): _*)
-    val qn = math.sqrt(query.map(x => x * x).sum)
-    df.select(id.as("id"), vec.as("_v"), sig.as("_sig"))
+    val qSig = Knn.querySig(planes, query)
+    val candidates = df.select(id.as("id"), vec.as("_v"), lshSignature(vec, planes).as("_sig"))
       .filter(bit_count(col("_sig").bitwiseXOR(lit(qSig))) <= probeHamming)
-      .select(col("id"), (dot(col("_v"), q) / (l2norm(col("_v")) * lit(qn))).as("cosine"))
-      .filter(!isnan(col("cosine"))) // zero-norm guard (NaN sorts above all)
-      .orderBy(col("cosine").desc, col("id"))
-      .limit(k)
+    Knn.cosineTopK(candidates, col("id"), col("_v"), query, k)
   }
 
   /** CLIP-score-style image–text ALIGNMENT card — per-group pair counts

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *   - init = the vectors of the k smallest ids (deterministic, like the
   *     planted-centroid discipline of semDedup);
   *   - assignment = argmin of the integer squared distance, ties to the
-  *     smallest cluster index;
+  *     smallest cluster index ([[Knn.nearest]]);
   *   - update = per-dimension truncating division sum/count (Java `/` on
   *     longs == SQL `//` on BIGINT), empty clusters keep their centroid.
   *
@@ -77,24 +77,11 @@ object KMeans {
     val spark = df.sparkSession
     val bcF = spark.sparkContext.broadcast(centroids)
     val assign = udf { (v: Seq[Long]) =>
-      val (best, dd) = nearest(bcF.value, v)
+      val (best, dd) = Knn.nearest(bcF.value, v, 0)
       (best.toLong, dd)
     }
     pts.select(col("id"), assign(col("v")).as("_a"))
       .select(col("id"), col("_a._1").as("cluster"), col("_a._2").as("dist"))
-  }
-
-  // a function VALUE, not a local def: closures capture just this
-  // serializable lambda, never the (non-serializable) enclosing object
-  private val nearest: (Array[Array[Long]], Seq[Long]) => (Int, Long) = (cs, v) => {
-    var best = 0; var bestD = Long.MaxValue; var c = 0
-    while (c < cs.length) {
-      val cv = cs(c); var dd = 0L; var j = 0
-      while (j < cv.length) { val t = v(j) - cv(j); dd += t * t; j += 1 }
-      if (dd < bestD) { bestD = dd; best = c }
-      c += 1
-    }
-    (best, bestD)
   }
 
   private def trainLoop(df: DataFrame, vec: Column, id: Column, k: Int,
@@ -123,9 +110,7 @@ object KMeans {
           val last = chosen.last
           var bestI = -1; var bestD = -1L; var i = 0
           while (i < pool.length) {
-            var dd = 0L; var j = 0
-            val p = pool(i)
-            while (j < p.length) { val t = p(j) - last(j); dd += t * t; j += 1 }
+            val dd = Knn.sqL2(pool(i), 0, last)
             if (dd < minD(i)) minD(i) = dd
             if (minD(i) > bestD) { bestD = minD(i); bestI = i }
             i += 1
@@ -149,7 +134,7 @@ object KMeans {
         val n = new Array[Long](cs.length)
         it.foreach { r =>
           val v = r.getSeq[Long](1)
-          val best = nearest(cs, v)._1
+          val best = Knn.nearest(cs, v, 0)._1
           val row = s(best); var j = 0
           while (j < d) { row(j) += v(j); j += 1 }
           n(best) += 1

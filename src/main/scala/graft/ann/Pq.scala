@@ -65,19 +65,8 @@ object Pq {
     }
   }
 
-  private def nearestCode(cb: Array[Array[Long]], v: Seq[Long], off: Int): (Int, Long) = {
-    var best = 0; var bestD = Long.MaxValue; var c = 0
-    while (c < cb.length) {
-      val cv = cb(c); var dd = 0L; var j = 0
-      while (j < cv.length) { val t = v(off + j) - cv(j); dd += t * t; j += 1 }
-      if (dd < bestD) { bestD = dd; best = c }
-      c += 1
-    }
-    (best, bestD)
-  }
-
   /** Encode vectors to PQ codes: per subspace, the argmin-distance code
-    * (ties to the smallest index). Input `vec` must be array<long>
+    * ([[Knn.nearest]], ties to the smallest index). Input `vec` must be array<long>
     * ([[KMeans.fixedPoint]]) of length m·subDim. Output (id, codes)
     * with codes array<long> of length m. Null vectors emit null codes. */
   def encode(df: DataFrame, vec: Column, id: Column, codebooks: Codebooks): DataFrame = {
@@ -91,7 +80,7 @@ object Pq {
         require(v.length == d, s"vector dim ${v.length} != codebook dim $d")
         val out = new Array[Long](m)
         var s = 0
-        while (s < m) { out(s) = nearestCode(cb(s), v, s * sd)._1.toLong; s += 1 }
+        while (s < m) { out(s) = Knn.nearest(cb(s), v, s * sd)._1.toLong; s += 1 }
         out
       }
     }
@@ -131,20 +120,18 @@ object Pq {
       coarse: Array[Array[Long]], codebooks: Codebooks): Unit = {
     val cs = coarse
     val cb = codebooks
-    val m = cb.length
-    val sd = cb(0)(0).length
-    require(cs(0).length == m * sd, s"coarse dim ${cs(0).length} != ${m * sd}")
+    val (m, sd) = Knn.pqShape(cs, cb)
     val u = udf { (v: Seq[Long]) =>
       if (v == null) null
       else {
-        val cell = nearestCode(cs, v, 0)._1
+        val cell = Knn.nearest(cs, v, 0)._1
         val cv = cs(cell)
         val resid = new Array[Long](v.length)
         var j = 0
         while (j < resid.length) { resid(j) = v(j) - cv(j); j += 1 }
         val codes = new Array[Long](m)
         var s = 0
-        while (s < m) { codes(s) = nearestCode(cb(s), resid, s * sd)._1.toLong; s += 1 }
+        while (s < m) { codes(s) = Knn.nearest(cb(s), resid, s * sd)._1.toLong; s += 1 }
         (cell.toLong, codes)
       }
     }
@@ -173,11 +160,10 @@ object Pq {
     (parse(lines(0)), lines.drop(1).map(parse))
   }
 
-  /** Probe an [[writeIvfPq]] store: rank cells by integer distance to the
-    * query on the driver (|coarse| distances, ties to the smallest cell),
-    * push the nprobe nearest cell ids as an explicit partition filter
-    * (directory pruning — the [[Ann.knnJoinIvf]] discipline), and ADC-scan
-    * the survivors with a PER-CELL distance table built from the query's
+  /** Probe an [[writeIvfPq]] store: rank cells on the driver
+    * ([[Knn.cellsByDistance]]), push the nprobe nearest cell ids as an
+    * explicit partition filter (directory pruning), and ADC-scan the
+    * survivors with a PER-CELL [[Knn.adcTable]] built from the query's
     * residual against that cell. Output (id, cluster, adist) for every
     * candidate, ordered (adist, id) — `limit(k)` on top is the top-k
     * probe; returning candidates keeps the oracle exact and lets callers
@@ -185,36 +171,15 @@ object Pq {
   def ivfPqProbe(spark: org.apache.spark.sql.SparkSession, path: String,
       query: Array[Long], coarse: Array[Array[Long]], codebooks: Codebooks,
       nprobe: Int): DataFrame = {
-    val m = codebooks.length
-    val sd = codebooks(0)(0).length
-    require(query.length == m * sd, s"query dim ${query.length} != ${m * sd}")
-    val ranked = coarse.zipWithIndex.map { case (cv, c) =>
-      var dd = 0L; var j = 0
-      while (j < cv.length) { val t = query(j) - cv(j); dd += t * t; j += 1 }
-      (c, dd)
-    }.sortBy { case (c, dd) => (dd, c) }.take(math.min(nprobe, coarse.length))
-    val cells = ranked.map(_._1.toLong)
-    // per probed cell: the ADC table of the query's residual vs that cell
+    Knn.pqShape(coarse, codebooks)
+    val cells = Knn.cellsByDistance(coarse, query, nprobe).map(_.toLong)
     val tables: Map[Long, Array[Array[Long]]] = cells.map { cell =>
       val cv = coarse(cell.toInt)
-      val resid = Array.tabulate(query.length)(j => query(j) - cv(j))
-      cell -> Array.tabulate(m) { s =>
-        codebooks(s).map { w =>
-          var dd = 0L; var j = 0
-          while (j < sd) { val t = resid(s * sd + j) - w(j); dd += t * t; j += 1 }
-          dd
-        }
-      }
+      cell -> Knn.adcTable(Array.tabulate(query.length)(j => query(j) - cv(j)), codebooks)
     }.toMap
-    val tb = tables
-    val u = udf { (cell: Long, cs: Seq[Long]) =>
-      val t = tb(cell)
-      var acc = 0L; var s = 0
-      while (s < cs.length) { acc += t(s)(cs(s).toInt); s += 1 }
-      acc
-    }
+    val u = udf((cell: Long, cs: Seq[Long]) => Knn.adcSum(tables(cell), cs))
     spark.read.parquet(path)
-      .filter(col("cluster").isin(cells: _*)) // partition pruning
+      .filter(col("cluster").isin(cells.toSeq: _*)) // partition pruning
       .select(col("id"), col("cluster").cast("long").as("cluster"),
         u(col("cluster").cast("long"), col("codes")).as("adist"))
       .orderBy(col("adist"), col("id"))
@@ -222,61 +187,35 @@ object Pq {
 
   /** Batch kNN JOIN against a [[writeIvfPq]] store — the PQ sibling of
     * [[Ann.knnJoinIvf]]: each query row is assigned its nprobe nearest
-    * cells (row-local kernel over the broadcast coarse centroids),
-    * exploded, and equi-joined on the store's `cluster` partition column;
-    * the probed cell union (bounded by the centroid count) is collected
-    * and pushed as an explicit `cluster IN (...)` partition filter. The
-    * per-candidate distance is the SAME value the single-query ADC table
-    * produces — Σ_s ‖(q − centroid)_s − word(codes_s)‖², computed by one
-    * primitive kernel over (query vector, cell, codes), so the batch path
-    * needs no per-query driver tables. Top-k per query by (adist, id).
-    * Output: (qid, id, adist, rank), rank 1..k. */
+    * cells ([[Knn.cellsByDistance]] per row, the ranking [[ivfPqProbe]]
+    * runs on the driver), exploded, and equi-joined on the store's
+    * `cluster` partition column, which [[Knn.probedStore]] prunes to the
+    * probed cells. The per-candidate distance is the SAME value the
+    * single-query ADC table produces ([[Knn.adcResidual]]), so the batch
+    * path needs no per-query driver tables. [[Knn.topK]] per query by
+    * (adist, id). A query row must be m·subDim wide; a null query probes
+    * nothing. Output: (qid, id, adist, rank), rank 1..k. */
   def ivfPqKnnJoin(spark: org.apache.spark.sql.SparkSession, queries: DataFrame,
       qvec: Column, qid: Column, path: String, coarse: Array[Array[Long]],
       codebooks: Codebooks, k: Int, nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1, s"k must be positive: $k")
     val cs = coarse
     val cb = codebooks
-    val m = cb.length
-    val sd = cb(0)(0).length
-    val np = math.min(nprobe, coarse.length)
+    Knn.pqShape(cs, cb)
     val cellsU = udf { (v: Seq[Long]) =>
-      if (v == null) Seq.empty[Long] // null queries are not probeable: emit no cells
-      else cs.indices.map { c =>
-        val cv = cs(c); var dd = 0L; var j = 0
-        while (j < cv.length) { val t = v(j) - cv(j); dd += t * t; j += 1 }
-        (dd, c)
-      }.sorted.take(np).map(_._2.toLong)
+      if (v == null) Array.empty[Long] // null queries are not probeable: emit no cells
+      else Knn.cellsByDistance(cs, v, nprobe).map(_.toLong)
     }
     val probes = queries
       .select(qid.cast("long").as("qid"), qvec.as("_qv"))
       .withColumn("cluster", explode(cellsU(col("_qv"))))
-    val probedCells = probes.select("cluster").distinct()
-      .collect().map(_.getLong(0)) // bounded by the coarse centroid count
-    val store = spark.read.parquet(path)
-      .filter(col("cluster").isin(probedCells: _*)) // partition pruning
+    val store = Knn.probedStore(spark, path, probes)
       .select(col("id"), col("cluster").cast("long").as("cluster"), col("codes"))
-    val adcU = udf { (qv: Seq[Long], cell: Long, codes: Seq[Long]) =>
-      val cv = cs(cell.toInt)
-      var acc = 0L; var s = 0
-      while (s < m) {
-        val w = cb(s)(codes(s).toInt)
-        var j = 0
-        while (j < sd) {
-          val t = qv(s * sd + j) - cv(s * sd + j) - w(j)
-          acc += t * t; j += 1
-        }
-        s += 1
-      }
-      acc
-    }
-    probes.join(store, Seq("cluster"))
-      .select(col("qid"), col("id"),
-        adcU(col("_qv"), col("cluster"), col("codes")).as("adist"))
-      .withColumn("rank",
-        row_number().over(Window.partitionBy("qid").orderBy(col("adist"), col("id"))))
-      .filter(col("rank") <= k)
+    val adcU = udf((qv: Seq[Long], cell: Long, codes: Seq[Long]) =>
+      Knn.adcResidual(qv, cs(cell.toInt), cb, codes))
+    val cand = probes.join(store, Seq("cluster"))
+      .select(col("qid"), col("id"), adcU(col("_qv"), col("cluster"), col("codes")).as("adist"))
+    Knn.topK(cand, "qid", Seq(col("adist"), col("id")), k)
   }
 
   /** Exact integer squared L2 distance to one query — the uncompressed
@@ -285,40 +224,24 @@ object Pq {
   def l2Dist(vec: Column, query: Array[Long]): Column = {
     val q = query
     val u = udf { (v: Seq[Long]) =>
-      if (v == null) null.asInstanceOf[java.lang.Long]
-      else {
-        var dd = 0L; var j = 0
-        while (j < q.length) { val t = v(j) - q(j); dd += t * t; j += 1 }
-        java.lang.Long.valueOf(dd)
-      }
+      if (v == null) null.asInstanceOf[java.lang.Long] else java.lang.Long.valueOf(Knn.sqL2(v, 0, q))
     }
     u(vec)
   }
 
   /** Asymmetric distance: approximate squared distance from one query
-    * (fixed-point, full width) to an encoded vector =
-    * Σ_s table(s)(codes(s)) where table(s)(c) = ‖query_s − codebook(s)(c)‖².
-    * The table is built on the DRIVER (m·k integer distances) and ships
-    * in the closure; the scan is m array lookups + adds per row — no
-    * join, no shuffle, composable into any projection over the codes. */
+    * (fixed-point, full width) to an encoded vector, [[Knn.adcSum]] over
+    * the query's [[Knn.adcTable]]. The table is built on the DRIVER (m·k
+    * integer distances) and ships in the closure; the scan is m array
+    * lookups + adds per row — no join, no shuffle, composable into any
+    * projection over the codes. */
   def adcDist(codes: Column, query: Array[Long], codebooks: Codebooks): Column = {
     val m = codebooks.length
     val sd = codebooks(0)(0).length
     require(query.length == m * sd, s"query dim ${query.length} != ${m * sd}")
-    val tb: Array[Array[Long]] = Array.tabulate(m) { s =>
-      codebooks(s).map { cv =>
-        var dd = 0L; var j = 0
-        while (j < sd) { val t = query(s * sd + j) - cv(j); dd += t * t; j += 1 }
-        dd
-      }
-    }
+    val tb = Knn.adcTable(query, codebooks)
     val u = udf { (cs: Seq[Long]) =>
-      if (cs == null) null.asInstanceOf[java.lang.Long]
-      else {
-        var acc = 0L; var s = 0
-        while (s < cs.length) { acc += tb(s)(cs(s).toInt); s += 1 }
-        java.lang.Long.valueOf(acc)
-      }
+      if (cs == null) null.asInstanceOf[java.lang.Long] else java.lang.Long.valueOf(Knn.adcSum(tb, cs))
     }
     u(codes)
   }

@@ -164,6 +164,41 @@ class AnnStoreSpec extends SparkSpec {
     assert(runIvf(2) == exact)
   }
 
+  test("knnJoinIvf: a one-row batch returns ivfTopK's ids and bit-identical cosines") {
+    val df = vecs(200) // sin-lattice: cells overlap, so the ranking decides recall
+    val path = Files.createTempDirectory("graft_knnivf_parity").toString + "/store"
+    Ann.writeIvfBucketed(df, col("embedding"), col("vec_id"), path, k = 6, iters = 3)
+    for (qid <- Seq(3L, 77L); nprobe <- Seq(1, 2)) {
+      val query = df.filter(col("vec_id") === qid)
+      val qv = query.head().getSeq[Float](1).map(_.toDouble)
+      val single = Ann.ivfTopK(spark, path, qv, 7, nprobe = nprobe)
+        .collect().map(r => (r.getLong(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1)))).toSeq
+      val batch = Ann.knnJoinIvf(spark, query, col("embedding"), col("vec_id"), path, k = 7, nprobe = nprobe)
+        .orderBy("rank")
+        .collect().map(r => (r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSeq
+      assert(batch == single, s"q=$qid nprobe=$nprobe")
+      assert(single.nonEmpty)
+    }
+  }
+
+  test("single-query probes fail fast on a zero-norm query") {
+    val df = clustered(120)
+    val lsh = Files.createTempDirectory("graft_zero_lsh").toString + "/store"
+    Ann.writeLshBucketed(df, col("embedding"), col("vec_id"), lsh, numBits = 8, prefixBits = 4)
+    val ivf = Files.createTempDirectory("graft_zero_ivf").toString + "/store"
+    Ann.writeIvfBucketed(df, col("embedding"), col("vec_id"), ivf, k = 6, iters = 2)
+    val zero = Seq.fill(16)(0.0)
+    val probes = Seq[() => Any](
+      () => Ann.bruteForceTopK(df, col("embedding"), col("vec_id"), zero, 5).collect(),
+      () => Ann.lshTopK(df, col("embedding"), col("vec_id"), zero, 5, numBits = 8).collect(),
+      () => Ann.lshTopKStored(spark, lsh, zero, 5, numBits = 8, prefixBits = 4).collect(),
+      () => Ann.ivfTopK(spark, ivf, zero, 5, nprobe = 2).collect())
+    probes.foreach { probe =>
+      val e = intercept[IllegalArgumentException](probe())
+      assert(e.getMessage.contains("zero-norm query"))
+    }
+  }
+
   test("hammingKnnJoin equals brute-force top-k at maxDistance <= bands-1 (pigeonhole)") {
     // deterministic 64-bit signatures with planted near-neighbors: every
     // 10th signature is its predecessor with 1-3 bits flipped

@@ -155,6 +155,34 @@ class PqSpec extends SparkSpec {
     assert(rcb.map(_.map(_.toSeq).toSeq).toSeq == cbs.map(_.map(_.toSeq).toSeq).toSeq)
   }
 
+  test("ivfPqKnnJoin: a query row wider than m·subDim fails, naming both dimensions") {
+    import java.nio.file.Files
+    val coarse = Array(Array(0L, 0L, 0L, 0L), Array(1000L, 1000L, 1000L, 1000L))
+    val cbs: Pq.Codebooks = Array(
+      Array(Array(0L, 0L), Array(7L, 7L)),
+      Array(Array(0L, 0L), Array(-7L, -7L)))
+    val df = Seq((1L, Seq(0L, 0L, 0L, 0L)), (2L, Seq(1000L, 1000L, 1000L, 1000L))).toDF("id", "v")
+    val path = Files.createTempDirectory("graft_ivfpq_dim").toString + "/store"
+    Pq.writeIvfPq(df, col("v"), col("id"), path, coarse, cbs)
+    // one well-formed row and one with a fifth component: scoring only the
+    // 4-long prefix would return a plausible, wrong neighbor list
+    val queries = Seq((1L, Seq(0L, 0L, 0L, 0L)), (9L, Seq(1000L, 1000L, 1000L, 1000L, 5L)))
+      .toDF("id", "v")
+    val e = intercept[Exception] {
+      Pq.ivfPqKnnJoin(spark, queries, col("v"), col("id"), path, coarse, cbs, k = 1, nprobe = 1)
+        .collect()
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("query dim 5 != 4")), s"got: $e")
+    // coarse centroids must be as wide as the codebooks' m·subDim
+    val wide = coarse.map(_ :+ 0L)
+    val e2 = intercept[IllegalArgumentException] {
+      Pq.ivfPqKnnJoin(spark, df, col("v"), col("id"), path, wide, cbs, k = 1, nprobe = 1)
+    }
+    assert(e2.getMessage.contains("coarse dim 5 != 4"))
+  }
+
   test("spread init seeds distinct centroids where first-k init seeds duplicates") {
     import graft.ann.KMeans
     // the k=2 smallest ids are IDENTICAL — first-k init duplicates them;
