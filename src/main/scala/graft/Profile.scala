@@ -29,10 +29,11 @@ import org.apache.spark.sql.functions._
   *
   * Every timed action runs under the job description
   * `<mode|query>/<label>/<sample>`; after it, one JSON line per stage
-  * (wall vs executor run/CPU time, GC, shuffle bytes, fetch wait, spill)
-  * and one `span` line: the action's jobs, its driver idle time (no job
-  * running) and its seam (wall time minus summed stage wall times;
-  * negative when stages overlap). */
+  * (wall vs executor run/CPU time, GC, shuffle bytes, fetch wait, spill,
+  * and task skew: the longest and the median task time and their ratio,
+  * the straggler ratio) and one `span` line: the action's jobs, its driver
+  * idle time (no job running) and its seam (wall time minus summed stage
+  * wall times; negative when stages overlap). */
 object Profile {
 
   /** A pre-rendered JSON value (number, array or object). */
@@ -49,9 +50,19 @@ object Profile {
 
   private def timed[T](body: => T): (T, Double) = { val t0 = System.nanoTime(); (body, (System.nanoTime() - t0) / 1e9) }
 
-  private final case class Stage(id: Int, job: String, name: String, metrics: ListMap[String, Long])
+  /** `metrics` add up over a span; `skew` is per stage only. */
+  private final case class Stage(id: Int, job: String, name: String, metrics: ListMap[String, Long],
+      skew: Seq[(String, Any)])
 
-  private def stage(i: StageInfo, job: String): Stage = {
+  /** Longest and median (lower) task time, and their ratio. */
+  private def skew(taskMs: Seq[Long]): Seq[(String, Any)] = {
+    val t = taskMs.sorted.toIndexedSeq
+    val (max, p50) = if (t.isEmpty) (0L, 0L) else (t.last, t((t.size - 1) / 2))
+    Seq("task_max_ms" -> max, "task_p50_ms" -> p50,
+      "straggler" -> Raw("%.2f".format(max.toDouble / math.max(p50, 1L))))
+  }
+
+  private def stage(i: StageInfo, job: String, taskMs: Seq[Long]): Stage = {
     val m = i.taskMetrics
     Stage(i.stageId, job, i.name.takeWhile(_ != '\n').take(60), ListMap(
       "tasks" -> i.numTasks.toLong,
@@ -63,7 +74,7 @@ object Profile {
       "fetch_wait_ms" -> m.shuffleReadMetrics.fetchWaitTime,
       "sh_write_mb" -> (m.shuffleWriteMetrics.bytesWritten >> 20),
       "sh_write_ms" -> m.shuffleWriteMetrics.writeTime / 1000000L,
-      "spill_mb" -> ((m.memoryBytesSpilled + m.diskBytesSpilled) >> 20)))
+      "spill_mb" -> ((m.memoryBytesSpilled + m.diskBytesSpilled) >> 20)), skew(taskMs))
   }
 
   /** The one stage listener: files every job and stage under its job
@@ -73,6 +84,7 @@ object Profile {
   private final class StageLog(spark: SparkSession) extends SparkListener {
     private val stageJob = new ConcurrentHashMap[Int, String]()
     private val stages = new ConcurrentLinkedQueue[Stage]()
+    private val taskMs = new ConcurrentHashMap[Int, ConcurrentLinkedQueue[Long]]()
     private val jobs = new ConcurrentHashMap[Int, (String, Long, Long)]() // id -> (desc, start, end)
     private val fences = new ConcurrentHashMap[String, CountDownLatch]()
     private def desc(p: java.util.Properties) = Option(p).map(_.getProperty("spark.job.description", "")).getOrElse("")
@@ -86,8 +98,14 @@ object Profile {
       jobs.computeIfPresent(e.jobId, (_, j) => j.copy(_3 = e.time))
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
       stageJob.put(e.stageInfo.stageId, desc(e.properties))
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      stages.add(stage(e.stageInfo, stageJob.getOrDefault(e.stageInfo.stageId, "")))
+    // a stage's task ends are posted before its completion
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      taskMs.computeIfAbsent(e.stageId, _ => new ConcurrentLinkedQueue[Long]()).add(e.taskInfo.duration)
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val id = e.stageInfo.stageId
+      val ts = Option(taskMs.remove(id)).map(_.asScala.toSeq).getOrElse(Seq.empty)
+      stages.add(stage(e.stageInfo, stageJob.getOrDefault(id, ""), ts))
+    }
 
     def span[T](label: String)(action: => T): T = {
       val sc = spark.sparkContext
@@ -100,7 +118,7 @@ object Profile {
       if (!seen.await(60, TimeUnit.SECONDS))
         throw new IllegalStateException(s"stage listener: events of '$label' not delivered within 60 s")
       val mine = stages.asScala.filter(_.job == label).toSeq.sortBy(_.id)
-      mine.foreach(s => emit((Seq("stage" -> s.id, "job" -> label) ++ s.metrics :+ ("name" -> s.name)): _*))
+      mine.foreach(s => emit((Seq("stage" -> s.id, "job" -> label) ++ s.metrics ++ s.skew :+ ("name" -> s.name)): _*))
       val jobSpans = jobs.values.asScala.filter(_._1 == label).map(j => (j._2, j._3)).toSeq.sortBy(_._1)
       val busyMs = jobSpans.foldLeft((0L, Long.MinValue)) { case ((busy, reach), (s, e)) =>
         (busy + math.max(0L, e - math.max(s, reach)), math.max(reach, e))

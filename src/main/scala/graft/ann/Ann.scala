@@ -23,18 +23,20 @@ object Ann {
   /** Scalar double loops: the reference the native `VectorExprs` kernels
     * must match (through the UDF variants below), and the IVF
     * normalization, assignment and cell ranking. The operators score with
-    * the native kernels ([[dot]], [[l2norm]]). */
-  private[ann] def dotK(a: Seq[Double], b: Seq[Double]): Double = {
+    * the native kernels ([[dot]], [[l2norm]]). Like every [[Knn]] kernel
+    * they take primitive arrays, and their UDFs declare `Array[Double]`
+    * parameters: a `Seq[Double]` UDF argument arrives as a linked list. */
+  private[ann] def dotK(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
     val n = math.min(a.length, b.length)
     while (i < n) { s += a(i) * b(i); i += 1 }
     s
   }
-  private[ann] def normK(a: Seq[Double]): Double = math.sqrt(dotK(a, a))
+  private[ann] def normK(a: Array[Double]): Double = math.sqrt(dotK(a, a))
 
-  private val dotUdf = udf((a: Seq[Double], b: Seq[Double]) => dotK(a, b))
-  private val normUdf = udf((a: Seq[Double]) => normK(a))
-  private val cosineUdf = udf { (a: Seq[Double], b: Seq[Double]) =>
+  private val dotUdf = udf((a: Array[Double], b: Array[Double]) => dotK(a, b))
+  private val normUdf = udf((a: Array[Double]) => normK(a))
+  private val cosineUdf = udf { (a: Array[Double], b: Array[Double]) =>
     dotK(a, b) / (normK(a) * normK(b))
   }
 
@@ -252,7 +254,7 @@ object Ann {
   // centroids are nearest the query.
   // --------------------------------------------------------------------
 
-  private val normalizeUdf = udf { (v: Seq[Double]) =>
+  private val normalizeUdf = udf { (v: Array[Double]) =>
     if (v == null) null
     else {
       val n = normK(v)
@@ -260,17 +262,19 @@ object Ann {
     }
   }
 
-  private def argmaxDotUdf(centroids: IndexedSeq[IndexedSeq[Double]]) =
-    udf { (v: Seq[Double]) =>
+  private def argmaxDotUdf(centroids: IndexedSeq[IndexedSeq[Double]]) = {
+    val cs = centroids.map(_.toArray).toArray
+    udf { (v: Array[Double]) =>
       var best = 0; var bestDot = Double.NegativeInfinity
       var c = 0
-      while (c < centroids.length) {
-        val d = dotK(v, centroids(c))
+      while (c < cs.length) {
+        val d = dotK(v, cs(c))
         if (d > bestDot) { bestDot = d; best = c }
         c += 1
       }
       best
     }
+  }
 
   /** Deterministic spherical k-means over the (unit-normalized) vectors.
     * No RNG: the k initial centroids are the first k distinct vectors in
@@ -349,12 +353,11 @@ object Ann {
     java.nio.file.Files.writeString(centroidsFile(path).toPath, txt)
   }
 
-  private[ann] def readCentroids(path: String): IndexedSeq[IndexedSeq[Double]] =
+  private[ann] def readCentroids(path: String): Array[Array[Double]] =
     java.nio.file.Files
       .readString(centroidsFile(path).toPath)
       .split('\n')
-      .map(_.split(',').map(_.toDouble).toIndexedSeq)
-      .toIndexedSeq
+      .map(_.split(',').map(_.toDouble))
 
   /** Top-k probe against a [[writeIvfBucketed]] store: rank cells on the
     * driver ([[Knn.cellsByDot]]), push the nprobe nearest cell ids into
@@ -368,7 +371,7 @@ object Ann {
       k: Int,
       nprobe: Int = 4
   ): DataFrame = {
-    val cells = Knn.cellsByDot(readCentroids(path), query, nprobe)
+    val cells = Knn.cellsByDot(readCentroids(path), query.toArray, nprobe)
     val candidates = spark.read
       .parquet(path)
       .filter(col("cluster").isin(cells.toSeq: _*)) // partition pruning
@@ -398,7 +401,7 @@ object Ann {
       nprobe: Int = 4
   ): DataFrame = {
     val centroids = readCentroids(path)
-    val cellsUdf = udf((v: Seq[Double]) => Knn.cellsByDot(centroids, v, nprobe))
+    val cellsUdf = udf((v: Array[Double]) => Knn.cellsByDot(centroids, v, nprobe))
     val qside = queries
       .select(qid.as("qid"), qvec.cast("array<double>").as("_qv"))
       .withColumn("_qn", l2norm(col("_qv")))
@@ -538,9 +541,11 @@ object Ann {
     * count/sum aggregate down to |groups| rows. The rate is ONE
     * correctly-rounded IEEE division of two longs, so a SQL oracle
     * restates the card exactly away from the threshold boundary.
-    * A NaN cosine (zero-norm/corrupt embedding) counts as NOT aligned —
-    * Spark orders NaN above every number, so a bare `>= threshold` would
-    * count exactly the rows a quality gate exists to reject.
+    * A zero-norm or null embedding has no cosine: with ANSI off the
+    * division by a zero norm is null, and a null score counts as NOT
+    * aligned. So does a NaN cosine (a NaN component): Spark orders NaN
+    * above every number, so a bare `>= threshold` would count exactly the
+    * rows a quality gate exists to reject.
     * Output: (label, n_pairs, n_aligned, align_rate). */
   def alignmentCard(
       pairs: DataFrame,
@@ -580,11 +585,11 @@ object Ann {
       .sortBy(_.getInt(0))
       .map(_.getDouble(1))
     val c = centroid
-    // Seq[Double] + explicit cast: a Seq[Float]-typed kernel would make
+    // Array[Double] + explicit cast: an Array[Float]-typed kernel would make
     // the analyzer float-round an array<double> input while the centroid
     // pass above averaged unrounded doubles — two passes, two precisions.
     // float inputs widen losslessly, so float-vector scores are unchanged.
-    val u = udf { (e: Seq[Double]) =>
+    val u = udf { (e: Array[Double]) =>
       if (e == null) null.asInstanceOf[java.lang.Double]
       else {
         var s = 0.0
@@ -607,10 +612,9 @@ object Ann {
     * (id, scale, q). One per-row primitive-loop kernel, no shuffle;
     * pairs with [[int8Dot]] for the in-store approximate dot. */
   def quantizeInt8(df: DataFrame, vec: Column, id: Column): DataFrame = {
-    val u = udf { (v: Seq[Double]) =>
-      if (v == null) null
+    val u = udf { (arr: Array[Double]) =>
+      if (arr == null) null
       else {
-        val arr = v.toArray
         var m = 0.0; var i = 0
         while (i < arr.length) { val a = math.abs(arr(i)); if (a > m) m = a; i += 1 }
         val scale = m / 127.0

@@ -35,7 +35,7 @@ object KMeans {
     * Primitive-loop kernel (Catalyst `transform` runs interpreted). */
   def fixedPoint(vec: Column, scale: Double = 1000.0): Column = {
     val sc = scale
-    val u = udf { (v: Seq[Float]) =>
+    val u = udf { (v: Array[Float]) =>
       if (v == null) null
       else {
         val out = new Array[Long](v.length)
@@ -76,7 +76,7 @@ object KMeans {
     val (pts, centroids) = trainLoop(df, vec, id, k, iters)
     val spark = df.sparkSession
     val bcF = spark.sparkContext.broadcast(centroids)
-    val assign = udf { (v: Seq[Long]) =>
+    val assign = udf { (v: Array[Long]) =>
       val (best, dd) = Knn.nearest(bcF.value, v, 0)
       (best.toLong, dd)
     }
@@ -133,7 +133,7 @@ object KMeans {
         val s = Array.ofDim[Long](cs.length, d)
         val n = new Array[Long](cs.length)
         it.foreach { r =>
-          val v = r.getSeq[Long](1)
+          val v = r.getSeq[Long](1).toArray
           val best = Knn.nearest(cs, v, 0)._1
           val row = s(best); var j = 0
           while (j < d) { row(j) += v(j); j += 1 }

@@ -8,6 +8,13 @@ import org.apache.spark.sql.functions._
   * step exists once here, and the operators pick only their store, their
   * score and their ranking key.
   *
+  *  - Array contract. Every per-row kernel here takes primitive arrays,
+  *    and the UDFs that call them declare `Array[Long]` / `Array[Double]`
+  *    parameters: Spark hands a typed UDF's `Seq[T]` argument over as a
+  *    linked `List`, where each `v(j)` and `v.length` walks the list, so
+  *    an indexed loop is quadratic per row. An `Array[T]` parameter is one
+  *    primitive copy (`ArrayData.toLongArray`), no boxing. Null arrays
+  *    still arrive as null; a null element fails either way.
   *  - Integer distance. [[sqL2]] is the squared-L2 loop over fixed-point
   *    longs (exact while the sum fits a long; see [[KMeans]] for the
   *    bounds) and [[nearest]] its argmin, ties to the smallest index.
@@ -44,7 +51,7 @@ import org.apache.spark.sql.functions._
 private[ann] object Knn {
 
   /** Σ_j (v(off + j) − w(j))² over j < |w|. */
-  def sqL2(v: collection.Seq[Long], off: Int, w: Array[Long]): Long = {
+  def sqL2(v: Array[Long], off: Int, w: Array[Long]): Long = {
     var dd = 0L; var j = 0
     while (j < w.length) { val t = v(off + j) - w(j); dd += t * t; j += 1 }
     dd
@@ -52,7 +59,7 @@ private[ann] object Knn {
 
   /** (index, distance) of the word nearest to v's slice at `off`, ties to
     * the smallest index. */
-  def nearest(words: Array[Array[Long]], v: collection.Seq[Long], off: Int): (Int, Long) = {
+  def nearest(words: Array[Array[Long]], v: Array[Long], off: Int): (Int, Long) = {
     var best = 0; var bestD = Long.MaxValue; var c = 0
     while (c < words.length) {
       val dd = sqL2(v, off, words(c))
@@ -63,13 +70,13 @@ private[ann] object Knn {
   }
 
   /** table(s)(c) = ‖q_s − codebooks(s)(c)‖² for subspace s and code c. */
-  def adcTable(q: collection.Seq[Long], codebooks: Pq.Codebooks): Array[Array[Long]] = {
+  def adcTable(q: Array[Long], codebooks: Pq.Codebooks): Array[Array[Long]] = {
     val sd = codebooks(0)(0).length
     Array.tabulate(codebooks.length)(s => codebooks(s).map(w => sqL2(q, s * sd, w)))
   }
 
   /** Σ_s table(s)(codes(s)). */
-  def adcSum(table: Array[Array[Long]], codes: Seq[Long]): Long = {
+  def adcSum(table: Array[Array[Long]], codes: Array[Long]): Long = {
     var acc = 0L; var s = 0
     while (s < codes.length) { acc += table(s)(codes(s).toInt); s += 1 }
     acc
@@ -81,8 +88,8 @@ private[ann] object Knn {
     * subtracts the centroid on the fly: a batch join scores each
     * candidate row once, and materializing its residual would allocate
     * per row. */
-  def adcResidual(q: Seq[Long], centroid: Array[Long], codebooks: Pq.Codebooks,
-      codes: Seq[Long]): Long = {
+  def adcResidual(q: Array[Long], centroid: Array[Long], codebooks: Pq.Codebooks,
+      codes: Array[Long]): Long = {
     val sd = codebooks(0)(0).length
     var acc = 0L; var s = 0
     while (s < codebooks.length) {
@@ -111,11 +118,11 @@ private[ann] object Knn {
 
   /** The np unit centroids with the largest dot product with v. |v| is one
     * positive factor of every dot, so it cannot change the order. */
-  def cellsByDot(centroids: IndexedSeq[IndexedSeq[Double]], v: Seq[Double], np: Int): Array[Int] =
+  def cellsByDot(centroids: Array[Array[Double]], v: Array[Double], np: Int): Array[Int] =
     rank(centroids.length, np)(c => -Ann.dotK(v, centroids(c)))(Ordering.Double.TotalOrdering)
 
   /** The np fixed-point centroids nearest to v; v must be as wide as they are. */
-  def cellsByDistance(centroids: Array[Array[Long]], v: collection.Seq[Long], np: Int): Array[Int] = {
+  def cellsByDistance(centroids: Array[Array[Long]], v: Array[Long], np: Int): Array[Int] = {
     require(v.length == centroids(0).length, s"query dim ${v.length} != ${centroids(0).length}")
     rank(centroids.length, np)(c => sqL2(v, 0, centroids(c)))
   }

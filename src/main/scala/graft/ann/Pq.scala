@@ -74,7 +74,7 @@ object Pq {
     val m = cb.length
     val d = m * cb(0)(0).length
     val sd = cb(0)(0).length
-    val u = udf { (v: Seq[Long]) =>
+    val u = udf { (v: Array[Long]) =>
       if (v == null) null
       else {
         require(v.length == d, s"vector dim ${v.length} != codebook dim $d")
@@ -93,7 +93,7 @@ object Pq {
     * k^m ≤ Long.MaxValue. */
   def codeKey(codes: Column, k: Int): Column = {
     val kk = k.toLong
-    val u = udf { (cs: Seq[Long]) =>
+    val u = udf { (cs: Array[Long]) =>
       if (cs == null) null.asInstanceOf[java.lang.Long]
       else {
         var acc = 0L; var p = 1L; var s = 0
@@ -121,7 +121,7 @@ object Pq {
     val cs = coarse
     val cb = codebooks
     val (m, sd) = Knn.pqShape(cs, cb)
-    val u = udf { (v: Seq[Long]) =>
+    val u = udf { (v: Array[Long]) =>
       if (v == null) null
       else {
         val cell = Knn.nearest(cs, v, 0)._1
@@ -177,7 +177,7 @@ object Pq {
       val cv = coarse(cell.toInt)
       cell -> Knn.adcTable(Array.tabulate(query.length)(j => query(j) - cv(j)), codebooks)
     }.toMap
-    val u = udf((cell: Long, cs: Seq[Long]) => Knn.adcSum(tables(cell), cs))
+    val u = udf((cell: Long, cs: Array[Long]) => Knn.adcSum(tables(cell), cs))
     spark.read.parquet(path)
       .filter(col("cluster").isin(cells.toSeq: _*)) // partition pruning
       .select(col("id"), col("cluster").cast("long").as("cluster"),
@@ -202,7 +202,7 @@ object Pq {
     val cs = coarse
     val cb = codebooks
     Knn.pqShape(cs, cb)
-    val cellsU = udf { (v: Seq[Long]) =>
+    val cellsU = udf { (v: Array[Long]) =>
       if (v == null) Array.empty[Long] // null queries are not probeable: emit no cells
       else Knn.cellsByDistance(cs, v, nprobe).map(_.toLong)
     }
@@ -211,7 +211,7 @@ object Pq {
       .withColumn("cluster", explode(cellsU(col("_qv"))))
     val store = Knn.probedStore(spark, path, probes)
       .select(col("id"), col("cluster").cast("long").as("cluster"), col("codes"))
-    val adcU = udf((qv: Seq[Long], cell: Long, codes: Seq[Long]) =>
+    val adcU = udf((qv: Array[Long], cell: Long, codes: Array[Long]) =>
       Knn.adcResidual(qv, cs(cell.toInt), cb, codes))
     val cand = probes.join(store, Seq("cluster"))
       .select(col("qid"), col("id"), adcU(col("_qv"), col("cluster"), col("codes")).as("adist"))
@@ -223,7 +223,7 @@ object Pq {
     * re-ranking and with [[Recall.atK]] for probe quality measurement. */
   def l2Dist(vec: Column, query: Array[Long]): Column = {
     val q = query
-    val u = udf { (v: Seq[Long]) =>
+    val u = udf { (v: Array[Long]) =>
       if (v == null) null.asInstanceOf[java.lang.Long] else java.lang.Long.valueOf(Knn.sqL2(v, 0, q))
     }
     u(vec)
@@ -240,7 +240,7 @@ object Pq {
     val sd = codebooks(0)(0).length
     require(query.length == m * sd, s"query dim ${query.length} != ${m * sd}")
     val tb = Knn.adcTable(query, codebooks)
-    val u = udf { (cs: Seq[Long]) =>
+    val u = udf { (cs: Array[Long]) =>
       if (cs == null) null.asInstanceOf[java.lang.Long] else java.lang.Long.valueOf(Knn.adcSum(tb, cs))
     }
     u(codes)

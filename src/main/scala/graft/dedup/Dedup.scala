@@ -1,6 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.concurrent.Await
+import scala.concurrent.duration.DurationInt
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
 
@@ -58,8 +60,10 @@ object Dedup {
 
   /** Exact Jaccard of two SORTED distinct long arrays — primitive merge.
     * The reference implementation the specs pin [[jaccardCol]]'s
-    * arithmetic against. */
-  private[graft] def jaccardLong(a: Seq[Long], b: Seq[Long]): Double = {
+    * arithmetic against. Arrays, not `Seq`s: wrapped in a UDF, a `Seq`
+    * argument arrives as a linked list and the indexed merge turns
+    * quadratic. */
+  private[graft] def jaccardLong(a: Array[Long], b: Array[Long]): Double = {
     var i = 0; var j = 0; var inter = 0
     val na = a.length; val nb = b.length
     while (i < na && j < nb) {
@@ -120,10 +124,14 @@ object Dedup {
 
   /** MinHash signature over shingle hashes: `numHashes` minima of splitmix
     * remixes. Per-row compute kernel as a Scala UDF (Catalyst higher-order
-    * functions are CodegenFallback/interpreted — measured ~40× slower). */
+    * functions are CodegenFallback/interpreted — measured ~40× slower).
+    * The UDF takes `Array[Long]`: Spark copies the row's array once into
+    * a primitive array. A `Seq[Long]` parameter arrives as a linked
+    * `List`, and the k·n indexed loop below then walks it on every
+    * access: O(k·n²) per row instead of O(k·n). */
   def minhashSignature(shingleHashes: Column, numHashes: Int = 32): Column = {
     val k = numHashes
-    val u = udf { (sh: Seq[Long]) =>
+    val u = udf { (sh: Array[Long]) =>
       val out = new Array[Long](k)
       var i = 0
       while (i < k) {
@@ -498,8 +506,7 @@ object Dedup {
     require(centroids.nonEmpty, "semDedup: centroids must be non-empty")
     val cents = centroids.map(_.toArray).toArray
     val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-    val assignUdf = udf { (v: Seq[Double]) =>
-      val arr = v.toArray
+    val assignUdf = udf { (arr: Array[Double]) =>
       var s = 0.0; var i = 0
       while (i < arr.length) { s += arr(i) * arr(i); i += 1 }
       val vn = math.sqrt(s)
@@ -585,8 +592,9 @@ object Dedup {
     * CONTRACT (r6): `truncate` must EAGERLY execute the frame as a Spark
     * action (localCheckpoint(true), checkpoint(true), or a write +
     * read-back) — the per-round convergence count rides the frame as an
-    * Observation whose metrics only arrive when that action runs; a lazy
-    * cut would block the round loop indefinitely.
+    * Observation whose metrics only arrive when that action runs. The
+    * round waits at most [[observationWait]] for them, then fails with
+    * "truncate must be eager" instead of blocking forever on a lazy cut.
     * The default `localCheckpoint` stores blocks on executors — fast, but
     * lost with an executor; long cluster runs should pass
     * `_.checkpoint(true)` (reliable storage via spark.checkpoint.dir) or a
@@ -614,6 +622,22 @@ object Dedup {
           "or switch to connectedComponentsStars for large-diameter graphs")
     r.labels
   }
+
+  /** How long a CC round waits for its Observation after `truncate`
+    * returns. The metrics reach the Observation through the listener bus
+    * shortly after the cut's action ends; a lazy cut runs no action, so
+    * they never come. */
+  private val observationWait = 10.seconds
+
+  /** The round's observed metrics row, or an error naming `op` and the
+    * broken contract when none arrives within [[observationWait]]. */
+  private def observed(obs: Observation, op: String): Row =
+    try Await.result(obs.future, observationWait)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(s"$op: no round metrics within $observationWait - " +
+          "truncate must be eager (localCheckpoint(true), checkpoint(true) or a write + read-back)")
+    }
 
   /** Label frame + convergence evidence from [[connectedComponents]]:
     * `iterations` = rounds executed, `converged` = fixpoint reached (labels
@@ -646,7 +670,7 @@ object Dedup {
       // count rides the SAME job that materializes the round (Observation
       // metrics fire on the eager truncate action), so each round is ONE
       // job: join → agg → cut.
-      val obs = org.apache.spark.sql.Observation()
+      val obs = Observation()
       val withSelf = sym.select(col("src"), col("dst"), lit(false).as("_self"))
         .unionAll(labels.select(col("id").as("src"), col("id").as("dst"), lit(true).as("_self")))
       val next = truncate(
@@ -661,7 +685,7 @@ object Dedup {
           .observe(obs, coalesce(sum(col("_chg")), lit(0L)).as("_changed"))
           .select(col("id"), col("comp"))
       )
-      val changed = obs.get("_changed").asInstanceOf[Long]
+      val changed = observed(obs, "connectedComponentsStats").getAs[Long]("_changed")
       labels = next
       converged = changed == 0L
       iter += 1
@@ -754,13 +778,13 @@ object Dedup {
       // the fixpoint checksum rides the SAME job that materializes the
       // round (Observation metrics fire on the eager truncate action) —
       // one job per round instead of materialize + checksum scan (r6)
-      val obs = org.apache.spark.sql.Observation()
+      val obs = Observation()
       val next = truncate(
         smallStar(largeStar(edges)).observe(obs,
           count(lit(1)).as("_c"),
           coalesce(sum(xxhash64(col("src"), col("dst"))), lit(0L)).as("_h")))
-      val m = obs.get
-      val nextSig = (m("_c").asInstanceOf[Long], m("_h").asInstanceOf[Long])
+      val m = observed(obs, "connectedComponentsStars")
+      val nextSig = (m.getAs[Long]("_c"), m.getAs[Long]("_h"))
       converged = nextSig == sig
       edges = next
       sig = nextSig
@@ -1140,7 +1164,7 @@ object Dedup {
     // rebuild kernel: mark tokens covered by any removed span start
     // (positions i..i+n-1), emit survivors — primitive loop, doc-local
     val nn = n
-    val rebuild = udf { (s: String, rm: Seq[Int]) =>
+    val rebuild = udf { (s: String, rm: Array[Int]) =>
       val toks = if (s == null) Array.empty[String] else s.trim.split("\\s+")
       if (rm == null || rm.isEmpty) (toks.mkString(" "), 0L)
       else {

@@ -232,10 +232,9 @@ object StreamingChecks {
       limited.foreach(r => s.add(r.getLong(0)))
       s
     }
-    val overlapUdf = udf { (sh: Seq[Long]) =>
-      var c = 0
-      val it = sh.iterator
-      while (it.hasNext) if (bset.contains(it.next())) c += 1
+    val overlapUdf = udf { (sh: Array[Long]) =>
+      var c = 0; var j = 0
+      while (j < sh.length) { if (bset.contains(sh(j))) c += 1; j += 1 }
       c
     }
     stream

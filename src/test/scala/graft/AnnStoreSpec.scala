@@ -371,14 +371,16 @@ class AnnStoreSpec extends SparkSpec {
     assert(got == Seq((0, 3L, 2L, 2.0 / 3.0), (1, 1L, 0L, 0.0)))
   }
 
-  test("alignmentCard: zero-norm embeddings (NaN cosine) count as NOT aligned") {
-    // Spark orders NaN above every double, so a bare >= threshold would
-    // admit exactly the corrupt rows the gate exists to reject
+  test("alignmentCard: zero-norm embeddings (null cosine) count as NOT aligned") {
+    // with ANSI off the division by a zero norm is null, not NaN; the
+    // gate must not count it
     val pairs = Seq(
       (0, Array(1f, 0f), Array(1f, 0f)), // cosine 1 -> aligned
-      (0, Array(0f, 0f), Array(1f, 0f)), // zero-norm img -> NaN -> NOT aligned
-      (0, Array(2f, 0f), Array(0f, 0f))  // zero-norm cap -> NaN -> NOT aligned
+      (0, Array(0f, 0f), Array(1f, 0f)), // zero-norm img -> null -> NOT aligned
+      (0, Array(2f, 0f), Array(0f, 0f))  // zero-norm cap -> null -> NOT aligned
     ).toDF("label", "img", "cap")
+    val cos = pairs.select(Ann.cosine(col("img"), col("cap"))).collect().map(r => Option(r.get(0))).toSeq
+    assert(cos == Seq(Some(1.0), None, None), s"cosines: $cos")
     val got = Ann.alignmentCard(pairs, col("label"), col("img"), col("cap"), threshold = 0.5)
       .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
     assert(got == Seq((3L, 1L)))

@@ -446,6 +446,28 @@ class TextDedupSpec extends SparkSpec {
     assert(full.labels.collect().forall(_.getLong(1) == 1L))
   }
 
+  test("connectedComponents: a lazy truncate fails fast and names the operator, both variants") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.DurationInt
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    val lazyCut: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = identity
+    val runs = Seq[(String, () => Dedup.CcResult)](
+      "connectedComponentsStats" -> (() =>
+        Dedup.connectedComponentsStats(pairs, col("id_a"), col("id_b"), truncate = lazyCut)),
+      "connectedComponentsStars" -> (() =>
+        Dedup.connectedComponentsStars(pairs, col("id_a"), col("id_b"), truncate = lazyCut)))
+    for ((op, run) <- runs) {
+      // the outer bound turns a regression to an unbounded wait into a
+      // failure instead of a hung suite
+      val t0 = System.nanoTime()
+      val e = intercept[IllegalStateException](Await.result(Future(run()), 60.seconds))
+      assert(e.getMessage.contains(op) && e.getMessage.contains("truncate must be eager"), e.getMessage)
+      assert((System.nanoTime() - t0) / 1e9 < 30.0, s"$op took too long to fail")
+    }
+  }
+
   test("connectedComponentsStars: same labels as propagation, O(log n) rounds on a long chain") {
     import spark.implicits._
     // mixed shapes: chain, pair, triangle — labels must equal propagation's
