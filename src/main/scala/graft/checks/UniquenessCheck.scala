@@ -1,6 +1,9 @@
 package graft.checks
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Repartition}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
@@ -23,11 +26,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   *  2. Hashes with count > 1 are duplicate CANDIDATES (true duplicates ∪ rare
   *     64-bit collisions). That tiny set is joined back to the rows as a
   *     data-induced predicate. When the planner can size both sides (a
-  *     parquet scan, or a driver-parsed source built as a local relation)
-  *     the candidate side is broadcast and the base rows never shuffle. Only
-  *     when it cannot size them (an RDD of unknown size, or a candidate side
-  *     above the broadcast threshold, as at 100 TB) does the join shuffle the
-  *     base rows.
+  *     parquet scan, or a driver-parsed local relation too large for one
+  *     partition) the candidate side is broadcast and the base rows never
+  *     shuffle. Only when it cannot size them (an RDD of unknown size, or a
+  *     candidate side above the broadcast threshold, as at 100 TB) does the
+  *     join shuffle the base rows.
   *  3. [[repeats]]: one `min(_rn) over Window.partitionBy(key)` on the
   *     candidate rows; violations are the rows with `_rn > _first`. Window
   *     partitions group null members together, so key equality is
@@ -36,6 +39,15 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   *  The salted variant (`salts > 0`, see [[Skew]]) replaces step 3 with a
   *  two-phase aggregate joined back null-safely, for keys so hot that one
   *  window partition would overwhelm a task.
+  *
+  *  One partition skips the prefilter: a small driver-parsed source is one
+  *  partition by construction (`TableSource.localFrame`), so no step needs an
+  *  exchange and the prefilter would only add its count pass and broadcast
+  *  job. [[candidateRows]] then returns every row, and [[repeats]] runs in
+  *  the scan's task. The output is the same: a row repeats an earlier row
+  *  of its key only if its key hash occurs at least twice, and the key's
+  *  first row shares that hash, so the prefilter never drops a violating
+  *  row or the row it cites.
   */
 object UniquenessCheck {
 
@@ -104,14 +116,32 @@ object UniquenessCheck {
 
   /** Hash prefilter: rows whose `_kh` occurs more than once. The 8-byte hash
     * and its count are all that shuffle; the candidate-hash set is joined
-    * back (broadcast when the planner can size it). */
-  private[checks] def candidateRows(base: DataFrame, salts: Int = 0): DataFrame = {
-    val counted =
-      if (salts > 0)
-        Skew.saltedGroupStats(base, Seq("_kh"), col("_rn"), salts).withColumnRenamed("_cnt", "_hc")
-      else base.groupBy(col("_kh")).agg(count(lit(1)).as("_hc"))
-    val candHashes = counted.filter(col("_hc") > 1).select(col("_kh"))
-    base.join(candHashes, "_kh")
+    * back (broadcast when the planner can size it). An unsalted base that is
+    * one partition by construction is returned whole: with no exchange to
+    * shrink, the count pass and the broadcast would only add jobs. */
+  private[checks] def candidateRows(base: DataFrame, salts: Int = 0): DataFrame =
+    if (salts == 0 && onePartition(base)) base
+    else {
+      val counted =
+        if (salts > 0)
+          Skew.saltedGroupStats(base, Seq("_kh"), col("_rn"), salts).withColumnRenamed("_cnt", "_hc")
+        else base.groupBy(col("_kh")).agg(count(lit(1)).as("_hc"))
+      val candHashes = counted.filter(col("_hc") > 1).select(col("_kh"))
+      base.join(candHashes, "_kh")
+    }
+
+  /** True when `df` is one partition by construction: its analyzed plan is a
+    * `Repartition(1)` (a small `TableSource.localFrame`) seen through
+    * projections and filters only. Anything else (a file scan, an RDD, a
+    * `limit`) may be split, and keeps the hash prefilter. */
+  private[graft] def onePartition(df: DataFrame): Boolean = {
+    @tailrec def walk(plan: LogicalPlan): Boolean = plan match {
+      case Project(_, child)    => walk(child)
+      case Filter(_, child)     => walk(child)
+      case Repartition(1, _, _) => true
+      case _                    => false
+    }
+    walk(df.queryExecution.analyzed)
   }
 
   /** The exact step: every candidate row that repeats an earlier row of the

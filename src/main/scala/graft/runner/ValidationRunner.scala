@@ -23,6 +23,11 @@ import graft.schema._
   *  - the violations of all checks are unioned lazily — nothing materialises
   *    until the caller aggregates or collects, so Catalyst can share the scan.
   *
+  * A small driver-parsed resource (an upload) is one partition
+  * (`TableSource.localFrame`): every check then runs without an exchange,
+  * uniqueness skips its hash prefilter, and `run` (row checks, exact
+  * windows and the per-code cap) is one Spark job in one task.
+  *
   * Row numbers: the engine needs a stable 1-based row identity for report
   * parity (reference rows are file-ordered, header = row 1). The caller
   * supplies `rowNumberCol`; for headered fixture parity use values starting

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.report.{ErrorSpec, Violation}
@@ -194,9 +195,20 @@ object TableSource {
 
   /** A frame over rows the driver already holds (parsed CSV/XLSX/shapefile
     * grids, transposes). It is a local relation with exact size statistics,
-    * not an RDD of unknown size, so the planner can broadcast a small join
-    * side computed from it (the uniqueness candidate hashes) instead of
-    * shuffling every row. */
-  private[sources] def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(rows.asJava, schema)
+    * not an RDD of unknown size, so the planner can size it.
+    *
+    * When its estimated size is at most `advisoryPartitionSizeInBytes` (an
+    * upload resource of a few thousand rows), the frame is one partition
+    * (`coalesce(1)`): adaptive execution would coalesce every shuffle of it
+    * to one partition anyway, and a one-partition child satisfies every
+    * distribution, so the planner drops every exchange and the whole
+    * validation plan runs as one job in one task (uniqueness also skips its
+    * hash prefilter, see `UniquenessCheck`). A larger relation keeps its
+    * parallel scan, and the planner broadcasts small join sides computed
+    * from it (the uniqueness candidate hashes) instead of shuffling rows. */
+  private[sources] def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame = {
+    val df = spark.createDataFrame(rows.asJava, schema)
+    val advisory = spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    if (df.queryExecution.analyzed.stats.sizeInBytes <= advisory) df.coalesce(1) else df
+  }
 }

@@ -23,9 +23,10 @@ import graft.sources.TableSource.{CsvTable, FormatError, IoError, SourceContentE
   * zip member can't be split for parallel scan), so — like the reference,
   * and like `TableSource.transpose` — parsing is driver-side and
   * size-guarded; the resulting DataFrame is a sized local relation
-  * (`TableSource.gridTable`) whose scan is split over the session's cores,
-  * and it flows through the exact same validation plan as any parquet/CSV
-  * source. Big data never arrives as xlsx; fixture and upload data does.
+  * (`TableSource.gridTable`), one partition when it is small (see
+  * `TableSource.localFrame`), and it flows through the exact same
+  * validation plan as any parquet/CSV source. Big data never arrives as
+  * xlsx; fixture and upload data does.
   *
   * The writer half covers the reference's Excel re-serialisation surface
   * (`jobs.py:410-415` writes the preprocessed frame back to an in-memory

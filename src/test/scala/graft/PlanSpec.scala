@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.runner.{ValidationConfig, ValidationRunner}
+import graft.runner.{ValidationConfig, ValidationResult, ValidationRunner}
 import graft.schema._
 
 /** Physical-plan assertions — the execution properties the engine is designed
@@ -316,10 +316,9 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("upload resource plan: candidate hashes broadcast, one window per exact step, codegen'd row checks") {
-    // a driver-parsed CSV with two unique columns and a composite PK: the
-    // local relation lets the planner size the base, so every candidate
-    // join broadcasts its hash side and no base row shuffles for it
+  /** A driver-parsed 1,000-row CSV with two unique columns and a composite
+    * PK, as an upload resource is read. */
+  private def uploadResource(): (org.apache.spark.sql.DataFrame, TableSchema) = {
     val header = "id,email,region,code,score"
     val lines = (1 to 1000).map(i => s"$i,u${i % 997}@x.org,r${i % 5},c${i % 200},${i % 90}")
     val f = java.nio.file.Files.createTempDirectory("graft_upload").resolve("r.csv")
@@ -335,21 +334,53 @@ class PlanSpec extends SparkSpec {
       ),
       primaryKey = Seq("region", "code")
     )
-    val viols = ValidationRunner
-      .plan(csv.df, schema, ValidationConfig(rowNumberCol = "_row_number"), Some(org.apache.spark.sql.Observation()))
-      .violations
-    // join strategies as planned, before any stage runs
-    val plan = executedPlan(viols)
-    assert(!plan.contains("SortMergeJoin"), s"candidate joins must not sort-merge on _kh:\n$plan")
-    val joins = "(BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin|NestedLoopJoin|CartesianProduct)".r
-    assert(joins.findAllIn(plan).size == 3, s"one (candidate) join per uniqueness check, none in the exact steps:\n$plan")
-    assert("BroadcastHashJoin".r.findAllIn(plan).size == 3, plan)
-    assert("Window \\[".r.findAllIn(plan).size == 3, s"one exact window per uniqueness check:\n$plan")
-    // codegen stages exist only in the final adaptive plan
-    viols.collect()
-    val finalPlan = executedPlan(viols)
-    assert("\\*\\(\\d+\\) Filter[^\\n]*\\n[^\\n]*CollectMetrics[^\\n]*\\n[^\\n]*LocalTableScan".r.findFirstIn(finalPlan).nonEmpty,
-      s"the row-check filter must run codegen'd over the local scan:\n$finalPlan")
+    (csv.df, schema)
+  }
+
+  private val uploadCfg = ValidationConfig(rowNumberCol = "_row_number")
+
+  private def uploadPlan(): ValidationResult = {
+    val (df, schema) = uploadResource()
+    ValidationRunner.plan(df, schema, uploadCfg, Some(org.apache.spark.sql.Observation()))
+  }
+
+  private val joins = "(BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin|NestedLoopJoin|CartesianProduct)".r
+
+  test("upload resource plan: candidate hashes broadcast, one window per exact step, codegen'd row checks") {
+    // above the one-partition size (1-byte advisory): a parallel local scan,
+    // which the planner can size, so every candidate join broadcasts its
+    // hash side and no base row shuffles for it
+    withAdvisorySize("1") {
+      val viols = uploadPlan().violations
+      // join strategies as planned, before any stage runs
+      val plan = executedPlan(viols)
+      assert(!plan.contains("SortMergeJoin"), s"candidate joins must not sort-merge on _kh:\n$plan")
+      assert(joins.findAllIn(plan).size == 3, s"one (candidate) join per uniqueness check, none in the exact steps:\n$plan")
+      assert("BroadcastHashJoin".r.findAllIn(plan).size == 3, plan)
+      assert("Window \\[".r.findAllIn(plan).size == 3, s"one exact window per uniqueness check:\n$plan")
+      // codegen stages exist only in the final adaptive plan
+      viols.collect()
+      val finalPlan = executedPlan(viols)
+      assert("\\*\\(\\d+\\) Filter[^\\n]*\\n[^\\n]*CollectMetrics[^\\n]*\\n[^\\n]*LocalTableScan".r.findFirstIn(finalPlan).nonEmpty,
+        s"the row-check filter must run codegen'd over the local scan:\n$finalPlan")
+    }
+  }
+
+  test("upload resource plan, one partition: no exchange, no join, one job") {
+    // below the one-partition size (the default advisory): the source is one
+    // partition, every distribution is satisfied without an exchange, and
+    // uniqueness skips its hash prefilter (no count pass, no broadcast)
+    val (df, schema) = uploadResource()
+    assert(jobsOf(ValidationRunner.run(df, schema, uploadCfg)) == 1,
+      "the whole resource, per-code cap included, must validate in one job")
+    val viols = uploadPlan().violations
+    assert(jobsOf(viols.collect()) == 1, "the whole violations plan must run as one job")
+    val finalPlan = executedPlan(viols).split("== Initial Plan ==").head
+    assert(!finalPlan.contains("Exchange"), s"one partition needs no exchange:\n$finalPlan")
+    assert(joins.findFirstIn(finalPlan).isEmpty, s"no prefilter join on one partition:\n$finalPlan")
+    assert("Window \\[".r.findAllIn(finalPlan).size == 3, s"one exact window per uniqueness check:\n$finalPlan")
+    assert("\\*\\(\\d+\\) Filter[^\\n]*\\n[^\\n]*CollectMetrics[^\\n]*\\n[^\\n]*Coalesce 1".r.findFirstIn(finalPlan).nonEmpty,
+      s"the row-check filter must run codegen'd over the one-partition scan:\n$finalPlan")
   }
 
   test("dedupLines plan: winner election is a partial-aggregated hash groupBy, joins are equi") {
@@ -546,10 +577,8 @@ class PlanSpec extends SparkSpec {
   test("violations plan is lazy: building it launches no Spark job") {
     // (the parquet read itself runs a footer-inference job — do it first)
     val df = spark.read.parquet(li).withColumn("_rid", col("l_orderkey"))
-    val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
     val schema = TableSchema(Seq(Field("l_returnflag", constraints = fc.copy(required = true))))
-    ValidationRunner.plan(df, schema, ValidationConfig(rowNumberCol = "_rid"))
-    val after = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    assert(after == before, "plan() must not trigger jobs")
+    assert(jobsOf(ValidationRunner.plan(df, schema, ValidationConfig(rowNumberCol = "_rid"))) == 0,
+      "plan() must not trigger jobs")
   }
 }

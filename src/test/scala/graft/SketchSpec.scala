@@ -18,6 +18,32 @@ class SketchSpec extends SparkSpec {
     assert(math.abs(sk.getQuantile(0.9) - 90000) < 2000)
   }
 
+  test("kll sketch: max normalized rank error at 99 quantiles within the k=200 bound (duplicates, 8 partitions)") {
+    import org.apache.datasketches.kll.KllSketch
+    import org.apache.datasketches.quantilescommon.QuantileSearchCriteria.INCLUSIVE
+    // 10^5 values over 20,000 distinct ones, plus a 5% atom, dealt to 8
+    // partitions in a seeded shuffle
+    val r = new scala.util.Random(36)
+    val values = r.shuffle((1 to 100000).map(i => if (i % 20 == 0) 4242.0 else r.nextInt(20000).toDouble))
+    val sk = SketchDrift.sketch(values.toDF("x").repartition(8), col("x"))
+    val sorted = values.toArray.sorted
+    val n = sorted.length
+    // inclusive exact rank: the share of values <= x
+    def exactRank(x: Double): Double = {
+      var lo = 0; var hi = n
+      while (lo < hi) { val mid = (lo + hi) >>> 1; if (sorted(mid) <= x) lo = mid + 1 else hi = mid }
+      lo.toDouble / n
+    }
+    val errors = (1 to 99).map { q =>
+      val x = sorted(math.ceil(q * n / 100.0).toInt - 1) // the exact q-th percentile
+      math.abs(sk.getRank(x, INCLUSIVE) - exactRank(x))
+    }
+    val bound = KllSketch.getNormalizedRankError(200, false)
+    info(f"max normalized rank error ${errors.max}%.5f, bound $bound%.5f")
+    assert(sk.getN == n)
+    assert(errors.max <= bound, s"max normalized rank error ${errors.max} above the k=200 bound $bound")
+  }
+
   test("serialized sketch round-trips (the persisted baseline snapshot)") {
     val df = (1 to 1000).map(_.toDouble).toDF("x")
     val bytes = df.agg(SketchAgg.kll(col("x"))).head().getAs[Array[Byte]](0)

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.col
+
 import graft.report.{PostProcess, ValidationReport, Violation, TableReport}
 import graft.runner.ValidationRunner
 import graft.schema._
@@ -75,7 +77,7 @@ class SourceSpec extends SparkSpec {
   }
 
   test("CSV and XLSX readers build a sized local relation: the planner can broadcast against it") {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
     val header = Seq("id", "name", "score")
     val grid = (1 to 1000).map(i => Seq(i.toString, s"name$i", if (i % 7 == 0) "" else s"${i % 50}.5"))
     val csvPath = writeTmp("local.csv", (header +: grid).map(_.mkString(",")).mkString("\n"))
@@ -83,18 +85,109 @@ class SourceSpec extends SparkSpec {
     graft.sources.XlsxSource.writeXlsx(xlsxPath, Seq("Sheet1" -> (header +: grid)))
     val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
     val expected = grid.zipWithIndex.map { case (cells, i) => (cells.map(c => if (c.isEmpty) null else c), i + 2L) }
-    for ((fmt, parsed) <- Seq(
-        "csv" -> TableSource.readCsv(spark, csvPath),
-        "xlsx" -> graft.sources.XlsxSource.readXlsx(spark, xlsxPath))) {
-      val df = parsed.toOption.get.df
-      assert(df.queryExecution.analyzed.isInstanceOf[LocalRelation], s"$fmt: ${df.queryExecution.analyzed}")
+    def frames() = Seq(
+      "csv" -> TableSource.readCsv(spark, csvPath),
+      "xlsx" -> graft.sources.XlsxSource.readXlsx(spark, xlsxPath)
+    ).map { case (fmt, parsed) => fmt -> parsed.toOption.get.df }
+    // above the one-partition size (1-byte advisory): a bare local relation
+    // with a parallel scan
+    val parallelSizes = withAdvisorySize("1") {
+      frames().map { case (fmt, df) =>
+        assert(df.queryExecution.analyzed.isInstanceOf[LocalRelation], s"$fmt: ${df.queryExecution.analyzed}")
+        assert(df.rdd.getNumPartitions > 1, s"$fmt must keep its parallel scan above the advisory size")
+        fmt -> df.queryExecution.optimizedPlan.stats.sizeInBytes
+      }.toMap
+    }
+    // below it (the default advisory): the same relation coalesced to one
+    // partition, with the same size estimate
+    for ((fmt, df) <- frames()) {
+      df.queryExecution.analyzed match {
+        case Repartition(1, false, _: LocalRelation) =>
+        case other => fail(s"$fmt must be one partition below the advisory size: $other")
+      }
+      assert(df.rdd.getNumPartitions == 1, fmt)
       val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(size == parallelSizes(fmt), s"$fmt: coalescing must keep the size estimate")
       assert(size > 0 && size < threshold, s"$fmt: $size bytes must be below the broadcast threshold $threshold")
       val got = df.collect().map(r => ((0 until 3).map(r.getString), r.getLong(3))).sortBy(_._2).toSeq
       // the CSV reader keeps empty cells as "", the XLSX writer omits them
       val norm = got.map { case (cells, rn) => (cells.map(c => if (c == null || c.isEmpty) null else c), rn) }
       assert(norm == expected, fmt)
     }
+  }
+
+  test("onePartition: a small local frame through select/filter, never a file scan, a Seq frame or a limit") {
+    import graft.checks.UniquenessCheck.onePartition
+    val path = writeTmp("one.csv", ("a,b" +: (1 to 50).map(i => s"$i,x$i")).mkString("\n"))
+    val small = TableSource.readCsv(spark, path).toOption.get.df
+    assert(onePartition(small))
+    assert(onePartition(small.select(col("a"), col("_row_number")).filter(col("a") =!= "7")))
+    val pq = Files.createTempDirectory("graft_src").resolve("one.parquet").toString
+    small.write.parquet(pq)
+    assert(!onePartition(spark.read.parquet(pq)), "a file scan may be split")
+    assert(!onePartition(spark.createDataFrame(Seq((1, "x"), (2, "y")))), "a Seq frame is a parallel local scan")
+    assert(!onePartition(small.limit(10)), "only projections and filters are walked")
+  }
+
+  test("one-partition parity: every source's report is byte-identical with and without the prefilter") {
+    import graft.sources.{BiffSource, ShapefileSource, XlsxSource}
+    def timeless(json: String) = json.replaceAll("\"time\": [-0-9.eE]+", "\"time\": _")
+    // default advisory: one partition, no prefilter; 1-byte advisory: a
+    // parallel scan with the hash prefilter
+    def parity(name: String)(validate: => ValidationReport): ValidationReport = {
+      val one = validate
+      val parallel = withAdvisorySize("1")(validate)
+      assert(timeless(one.toJson) == timeless(parallel.toJson), name)
+      one
+    }
+    def codes(r: ValidationReport) = r.tables.flatMap(_.errors).map(_.code).toSet
+
+    val invPath = writeTmp("inv.csv", INVALID_CSV)
+    val invalid = parity("INVALID_CSV")(ValidationRunner.runCsv(spark, invPath, abcdSchema)._1)
+    assert(codes(invalid) == Set("missing-value"))
+
+    val idRegion = TableSchema(Seq(
+      Field("id", constraints = fc.copy(unique = true)),
+      Field("region", ftype = "integer", constraints = fc.copy(maximum = Some(3.0)))
+    ))
+    val grid = Seq(Seq("id", "region"), Seq("1", "2"), Seq("2", "4"), Seq("1", "9"), Seq("3", "1"))
+    val xlsx = Files.createTempDirectory("graft_src").resolve("p.xlsx").toString
+    XlsxSource.writeXlsx(xlsx, Seq("S" -> grid))
+    val xls = Files.createTempDirectory("graft_src").resolve("p.xls").toString
+    BiffSource.writeXls(xls, Seq("S" -> grid))
+    for (path <- Seq(xlsx, xls)) {
+      val rep = parity(path)(ValidationRunner.runXlsx(spark, path, idRegion)._1)
+      assert(codes(rep) == Set("unique-constraint", "maximum-constraint"), path)
+    }
+
+    val shp = Files.createTempDirectory("graft_src").resolve("p.shp").toString
+    ShapefileSource.writeShapefile(shp, Seq("id", "region"), grid.tail, nullShapeAt = i => i == 1)
+    val shpRep = parity("shapefile")(ValidationRunner.runShapefile(spark, shp,
+      TableSchema(idRegion.fields :+ Field("adr_geometry_check")))._1)
+    assert(codes(shpRep) == Set("unique-constraint", "maximum-constraint", "missing-geometry"))
+
+    // 1,500 rows: repeated single keys, a composite PK whose member b is null
+    // on every 50th (ragged) row, and 50 exact duplicate rows
+    def row(i: Int) = if (i % 50 == 0) s"k$i,a${i % 700}" else s"k$i,a${i % 700},b${i % 2},n$i"
+    val lines = (1 to 1400).map(row) ++ (1 to 50).map(row) ++ (1451 to 1500).map(i => s"k${i - 1400},z$i,b0,n$i")
+    val keys = writeTmp("keys.csv", ("id,a,b,note" +: lines).mkString("\n"))
+    val keySchema = TableSchema(
+      Seq(Field("id", constraints = fc.copy(unique = true)), Field("a"), Field("b"), Field("note")),
+      primaryKey = Seq("a", "b"))
+    val withDupRows = ValidationOptions(checks = ValidationOptions.default.checks :+ "duplicate-row")
+    val keyRep = parity("keys")(ValidationRunner.runCsv(spark, keys, keySchema, withDupRows)._1)
+    assert(codes(keyRep) == Set("missing-value", "unique-constraint", "duplicate-row"))
+
+    // the per-code cap (1,000) hides the blank PK cell's required error
+    // behind 1,010 earlier ones, so the uncapped probe decides that the
+    // later duplicate PK is noise
+    val capped = (1 to 1010).map(i => s"k$i,") ++ Seq(",x", "dup,y", "dup,z")
+    val capPath = writeTmp("cap.csv", ("id,name" +: capped).mkString("\n"))
+    val capSchema = TableSchema(
+      Seq(Field("id", constraints = fc.copy(required = true)), Field("name", constraints = fc.copy(required = true))),
+      primaryKey = Seq("id"))
+    val capRep = parity("cap")(ValidationRunner.runCsv(spark, capPath, capSchema)._1)
+    assert(codes(capRep) == Set("required-constraint"), "the uncapped probe must drop the unique-constraint noise")
   }
 
   test("json reader: array of objects, corrupt input is a source-error") {

@@ -28,6 +28,31 @@ trait SparkSpec extends AnyFunSuite {
       (rows, Option(got.poll(15, TimeUnit.SECONDS)))
     } finally spark.listenerManager.unregister(listener)
   }
+
+  /** The number of Spark jobs `body` launches, counted under a fresh job
+    * group once the listener bus has delivered every event. */
+  def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, group)
+    try body
+    finally sc.clearJobGroup()
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** Runs `body` with the shared session's
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` set to `size`, and
+    * restores it afterwards. A 1-byte size keeps every driver-parsed source
+    * above the one-partition threshold (`TableSource.localFrame`): a
+    * parallel scan with the uniqueness hash prefilter. */
+  def withAdvisorySize[T](size: String)(body: => T): T = {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, size)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 object SparkSpec {
