@@ -412,7 +412,7 @@ object ValidationRunner {
     runParsed(graft.sources.ShapefileSource.readShapefile(spark, path), path, schema, options, sourceLabel)
 
   /** Shared read→header→body assembly for parsed (CSV/xlsx/shapefile) sources. */
-  private def runParsed(
+  private[graft] def runParsed(
       parsed: Either[graft.sources.TableSource.SourceError, graft.sources.TableSource.CsvTable],
       path: String,
       schema: TableSchema,

@@ -1,10 +1,11 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.report.{ErrorSpec, Violation}
@@ -197,18 +198,50 @@ object TableSource {
     * grids, transposes). It is a local relation with exact size statistics,
     * not an RDD of unknown size, so the planner can size it.
     *
-    * When its estimated size is at most `advisoryPartitionSizeInBytes` (an
-    * upload resource of a few thousand rows), the frame is one partition
-    * (`coalesce(1)`): adaptive execution would coalesce every shuffle of it
-    * to one partition anyway, and a one-partition child satisfies every
-    * distribution, so the planner drops every exchange and the whole
-    * validation plan runs as one job in one task (uniqueness also skips its
-    * hash prefilter, see `UniquenessCheck`). A larger relation keeps its
-    * parallel scan, and the planner broadcasts small join sides computed
-    * from it (the uniqueness candidate hashes) instead of shuffling rows. */
+    * When the rows hold at most [[OnePartitionBytes]] (an upload resource
+    * of a few thousand rows), the frame is one partition (`coalesce(1)`): a
+    * one-partition child satisfies every distribution, so the planner drops
+    * every exchange and the whole validation plan runs as one job in one
+    * task (uniqueness also skips its hash prefilter, see `UniquenessCheck`).
+    * A larger relation keeps its parallel scan, and the planner broadcasts
+    * small join sides computed from it (the uniqueness candidate hashes)
+    * instead of shuffling rows. */
   private[sources] def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame = {
     val df = spark.createDataFrame(rows.asJava, schema)
-    val advisory = spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    if (df.queryExecution.analyzed.stats.sizeInBytes <= advisory) df.coalesce(1) else df
+    if (fitsOnePartition(rows)) df.coalesce(1) else df
+  }
+
+  /** The largest relation, in row bytes, that [[localFrame]] makes one
+    * partition. Its one task carries a serialized copy of the rows per
+    * branch of the violations union (the row checks, then one per
+    * uniqueness check), about 1.2 bytes per row byte each, so a five-branch
+    * upload ships about 6 MiB at this bound, far below
+    * `spark.rpc.message.maxSize` (128 MiB). Speed does not set the bound:
+    * on 4 cores one partition validated a ten-column CSV about twice as
+    * fast as the parallel scan with the hash prefilter at every size
+    * measured, up to 250,000 rows (38 MB of row bytes, a 211 MiB task). It
+    * covers the largest upload resource the benchmark generates (5,000
+    * rows, about 0.62 MB). */
+  private[graft] val OnePartitionBytes: Long = 1L << 20
+
+  /** True when `rows` hold at most [[OnePartitionBytes]] row bytes: 8 per
+    * cell (its `UnsafeRow` slot) plus the UTF-8 bytes of each string cell.
+    * Counting stops at the bound. */
+  private[graft] def fitsOnePartition(rows: Seq[Row]): Boolean = {
+    var bytes = 0L
+    val it = rows.iterator
+    while (bytes <= OnePartitionBytes && it.hasNext) {
+      val row = it.next()
+      bytes += 8L * row.length
+      var i = 0
+      while (i < row.length) {
+        row.get(i) match {
+          case s: String => bytes += s.getBytes(UTF_8).length
+          case _         =>
+        }
+        i += 1
+      }
+    }
+    bytes <= OnePartitionBytes
   }
 }

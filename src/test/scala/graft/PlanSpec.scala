@@ -339,37 +339,39 @@ class PlanSpec extends SparkSpec {
 
   private val uploadCfg = ValidationConfig(rowNumberCol = "_row_number")
 
-  private def uploadPlan(): ValidationResult = {
+  /** The upload resource's violations plan; `parallel` plans the same
+    * rows as the parallel scan a relation above the one-partition bound
+    * gets. */
+  private def uploadPlan(parallel: Boolean = false): ValidationResult = {
     val (df, schema) = uploadResource()
-    ValidationRunner.plan(df, schema, uploadCfg, Some(org.apache.spark.sql.Observation()))
+    ValidationRunner.plan(if (parallel) parallelScan(df) else df, schema, uploadCfg,
+      Some(org.apache.spark.sql.Observation()))
   }
 
   private val joins = "(BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin|NestedLoopJoin|CartesianProduct)".r
 
   test("upload resource plan: candidate hashes broadcast, one window per exact step, codegen'd row checks") {
-    // above the one-partition size (1-byte advisory): a parallel local scan,
-    // which the planner can size, so every candidate join broadcasts its
-    // hash side and no base row shuffles for it
-    withAdvisorySize("1") {
-      val viols = uploadPlan().violations
-      // join strategies as planned, before any stage runs
-      val plan = executedPlan(viols)
-      assert(!plan.contains("SortMergeJoin"), s"candidate joins must not sort-merge on _kh:\n$plan")
-      assert(joins.findAllIn(plan).size == 3, s"one (candidate) join per uniqueness check, none in the exact steps:\n$plan")
-      assert("BroadcastHashJoin".r.findAllIn(plan).size == 3, plan)
-      assert("Window \\[".r.findAllIn(plan).size == 3, s"one exact window per uniqueness check:\n$plan")
-      // codegen stages exist only in the final adaptive plan
-      viols.collect()
-      val finalPlan = executedPlan(viols)
-      assert("\\*\\(\\d+\\) Filter[^\\n]*\\n[^\\n]*CollectMetrics[^\\n]*\\n[^\\n]*LocalTableScan".r.findFirstIn(finalPlan).nonEmpty,
-        s"the row-check filter must run codegen'd over the local scan:\n$finalPlan")
-    }
+    // above the one-partition bound: a parallel local scan, which the
+    // planner can size, so every candidate join broadcasts its hash side
+    // and no base row shuffles for it
+    val viols = uploadPlan(parallel = true).violations
+    // join strategies as planned, before any stage runs
+    val plan = executedPlan(viols)
+    assert(!plan.contains("SortMergeJoin"), s"candidate joins must not sort-merge on _kh:\n$plan")
+    assert(joins.findAllIn(plan).size == 3, s"one (candidate) join per uniqueness check, none in the exact steps:\n$plan")
+    assert("BroadcastHashJoin".r.findAllIn(plan).size == 3, plan)
+    assert("Window \\[".r.findAllIn(plan).size == 3, s"one exact window per uniqueness check:\n$plan")
+    // codegen stages exist only in the final adaptive plan
+    viols.collect()
+    val finalPlan = executedPlan(viols)
+    assert("\\*\\(\\d+\\) Filter[^\\n]*\\n[^\\n]*CollectMetrics[^\\n]*\\n[^\\n]*LocalTableScan".r.findFirstIn(finalPlan).nonEmpty,
+      s"the row-check filter must run codegen'd over the local scan:\n$finalPlan")
   }
 
   test("upload resource plan, one partition: no exchange, no join, one job") {
-    // below the one-partition size (the default advisory): the source is one
-    // partition, every distribution is satisfied without an exchange, and
-    // uniqueness skips its hash prefilter (no count pass, no broadcast)
+    // below the one-partition bound: the source is one partition, every
+    // distribution is satisfied without an exchange, and uniqueness skips
+    // its hash prefilter (no count pass, no broadcast)
     val (df, schema) = uploadResource()
     assert(jobsOf(ValidationRunner.run(df, schema, uploadCfg)) == 1,
       "the whole resource, per-code cap included, must validate in one job")

@@ -26,6 +26,8 @@ class SourceSpec extends SparkSpec {
   private val INVALID_CSV = "a,b,c,d\n1,2,3\n"
   private val VALID_CSV = "a,b,c,d\n1,2,3,4\n"
 
+  private def timeless(json: String) = json.replaceAll("\"time\": [-0-9.eE]+", "\"time\": _")
+
   private val abcdSchema =
     TableSchema(Seq(Field("a"), Field("b"), Field("c"), Field("d")))
 
@@ -85,34 +87,69 @@ class SourceSpec extends SparkSpec {
     graft.sources.XlsxSource.writeXlsx(xlsxPath, Seq("Sheet1" -> (header +: grid)))
     val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
     val expected = grid.zipWithIndex.map { case (cells, i) => (cells.map(c => if (c.isEmpty) null else c), i + 2L) }
-    def frames() = Seq(
+    val frames = Seq(
       "csv" -> TableSource.readCsv(spark, csvPath),
       "xlsx" -> graft.sources.XlsxSource.readXlsx(spark, xlsxPath)
     ).map { case (fmt, parsed) => fmt -> parsed.toOption.get.df }
-    // above the one-partition size (1-byte advisory): a bare local relation
-    // with a parallel scan
-    val parallelSizes = withAdvisorySize("1") {
-      frames().map { case (fmt, df) =>
-        assert(df.queryExecution.analyzed.isInstanceOf[LocalRelation], s"$fmt: ${df.queryExecution.analyzed}")
-        assert(df.rdd.getNumPartitions > 1, s"$fmt must keep its parallel scan above the advisory size")
-        fmt -> df.queryExecution.optimizedPlan.stats.sizeInBytes
-      }.toMap
-    }
-    // below it (the default advisory): the same relation coalesced to one
-    // partition, with the same size estimate
-    for ((fmt, df) <- frames()) {
+    // below the one-partition bound: the local relation coalesced to one
+    // partition, with the size estimate of the bare relation
+    for ((fmt, df) <- frames) {
       df.queryExecution.analyzed match {
         case Repartition(1, false, _: LocalRelation) =>
-        case other => fail(s"$fmt must be one partition below the advisory size: $other")
+        case other => fail(s"$fmt must be one partition below the bound: $other")
       }
       assert(df.rdd.getNumPartitions == 1, fmt)
+      val bare = parallelScan(df)
+      assert(bare.queryExecution.analyzed.isInstanceOf[LocalRelation] && bare.rdd.getNumPartitions > 1, fmt)
       val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      assert(size == parallelSizes(fmt), s"$fmt: coalescing must keep the size estimate")
+      assert(size == bare.queryExecution.optimizedPlan.stats.sizeInBytes, s"$fmt: coalescing must keep the size estimate")
       assert(size > 0 && size < threshold, s"$fmt: $size bytes must be below the broadcast threshold $threshold")
       val got = df.collect().map(r => ((0 until 3).map(r.getString), r.getLong(3))).sortBy(_._2).toSeq
       // the CSV reader keeps empty cells as "", the XLSX writer omits them
       val norm = got.map { case (cells, rn) => (cells.map(c => if (c == null || c.isEmpty) null else c), rn) }
       assert(norm == expected, fmt)
+    }
+  }
+
+  test("one-partition bound: a resource of exactly OnePartitionBytes is one partition, one row more is a parallel scan") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
+    import graft.checks.UniquenessCheck.onePartition
+    // every row is 64 row bytes: four cells (three strings and the row
+    // number) at 8 bytes each plus 32 bytes of ASCII strings (none numeric,
+    // so the XLSX round trip keeps them as written)
+    val perRow = 64L
+    val atBound = (TableSource.OnePartitionBytes / perRow).toInt
+    def grid(n: Int) = (1 to n).map(i => Seq(f"i$i%09d", f"n${i % (n - 20)}%010d", f"s$i%010d"))
+    val header = Seq("id", "name", "score")
+    def rows(n: Int) = grid(n).map(c => org.apache.spark.sql.Row.fromSeq(c :+ 0L))
+    assert(TableSource.fitsOnePartition(rows(atBound)) && !TableSource.fitsOnePartition(rows(atBound + 1)))
+    val schema = TableSchema(Seq(Field("id"), Field("name", constraints = fc.copy(unique = true)), Field("score")))
+    for ((n, one) <- Seq(atBound -> true, atBound + 1 -> false)) {
+      val cells = grid(n)
+      val csvPath = writeTmp(s"bound$n.csv", (header +: cells).map(_.mkString(",")).mkString("\n"))
+      val xlsxPath = Files.createTempDirectory("graft_src").resolve(s"bound$n.xlsx").toString
+      graft.sources.XlsxSource.writeXlsx(xlsxPath, Seq("Sheet1" -> (header +: cells)))
+      for ((fmt, parsed) <- Seq("csv" -> TableSource.readCsv(spark, csvPath),
+                                "xlsx" -> graft.sources.XlsxSource.readXlsx(spark, xlsxPath))) {
+        val table = parsed.toOption.get
+        val df = table.df
+        (df.queryExecution.analyzed, one) match {
+          case (Repartition(1, false, _: LocalRelation), true) =>
+            assert(df.rdd.getNumPartitions == 1, s"$fmt $n")
+          case (_: LocalRelation, false) =>
+            assert(df.rdd.getNumPartitions > 1, s"$fmt $n: above the bound the scan stays parallel")
+          case (other, _) => fail(s"$fmt $n rows (one partition: $one): $other")
+        }
+        assert(onePartition(df) == one, s"$fmt $n")
+        // 20 repeated names either way; the same report on both plans
+        val rep = ValidationRunner.runParsed(Right(table), csvPath, schema, ValidationOptions.default, Some("b"))._1
+        assert(rep.errorCount == 20, s"$fmt $n")
+        if (one) {
+          val par = ValidationRunner.runParsed(Right(table.copy(df = parallelScan(df))), csvPath, schema,
+            ValidationOptions.default, Some("b"))._1
+          assert(timeless(rep.toJson) == timeless(par.toJson), s"$fmt $n")
+        }
+      }
     }
   }
 
@@ -130,20 +167,24 @@ class SourceSpec extends SparkSpec {
   }
 
   test("one-partition parity: every source's report is byte-identical with and without the prefilter") {
+    import graft.checks.UniquenessCheck.onePartition
     import graft.sources.{BiffSource, ShapefileSource, XlsxSource}
-    def timeless(json: String) = json.replaceAll("\"time\": [-0-9.eE]+", "\"time\": _")
-    // default advisory: one partition, no prefilter; 1-byte advisory: a
-    // parallel scan with the hash prefilter
-    def parity(name: String)(validate: => ValidationReport): ValidationReport = {
-      val one = validate
-      val parallel = withAdvisorySize("1")(validate)
+    // as read: one partition, no prefilter; the same rows as a parallel
+    // scan: the hash prefilter
+    def parity(name: String, path: String, schema: TableSchema, options: ValidationOptions = ValidationOptions.default)(
+        parsed: Either[TableSource.SourceError, TableSource.CsvTable]): ValidationReport = {
+      val table = parsed.toOption.get
+      assert(onePartition(table.df), name)
+      def validate(t: TableSource.CsvTable) = ValidationRunner.runParsed(Right(t), path, schema, options, None)._1
+      val one = validate(table)
+      val parallel = validate(table.copy(df = parallelScan(table.df)))
       assert(timeless(one.toJson) == timeless(parallel.toJson), name)
       one
     }
     def codes(r: ValidationReport) = r.tables.flatMap(_.errors).map(_.code).toSet
 
     val invPath = writeTmp("inv.csv", INVALID_CSV)
-    val invalid = parity("INVALID_CSV")(ValidationRunner.runCsv(spark, invPath, abcdSchema)._1)
+    val invalid = parity("INVALID_CSV", invPath, abcdSchema)(TableSource.readCsv(spark, invPath))
     assert(codes(invalid) == Set("missing-value"))
 
     val idRegion = TableSchema(Seq(
@@ -156,14 +197,14 @@ class SourceSpec extends SparkSpec {
     val xls = Files.createTempDirectory("graft_src").resolve("p.xls").toString
     BiffSource.writeXls(xls, Seq("S" -> grid))
     for (path <- Seq(xlsx, xls)) {
-      val rep = parity(path)(ValidationRunner.runXlsx(spark, path, idRegion)._1)
+      val rep = parity(path, path, idRegion)(XlsxSource.readXlsx(spark, path))
       assert(codes(rep) == Set("unique-constraint", "maximum-constraint"), path)
     }
 
     val shp = Files.createTempDirectory("graft_src").resolve("p.shp").toString
     ShapefileSource.writeShapefile(shp, Seq("id", "region"), grid.tail, nullShapeAt = i => i == 1)
-    val shpRep = parity("shapefile")(ValidationRunner.runShapefile(spark, shp,
-      TableSchema(idRegion.fields :+ Field("adr_geometry_check")))._1)
+    val shpRep = parity("shapefile", shp, TableSchema(idRegion.fields :+ Field("adr_geometry_check")))(
+      ShapefileSource.readShapefile(spark, shp))
     assert(codes(shpRep) == Set("unique-constraint", "maximum-constraint", "missing-geometry"))
 
     // 1,500 rows: repeated single keys, a composite PK whose member b is null
@@ -175,7 +216,7 @@ class SourceSpec extends SparkSpec {
       Seq(Field("id", constraints = fc.copy(unique = true)), Field("a"), Field("b"), Field("note")),
       primaryKey = Seq("a", "b"))
     val withDupRows = ValidationOptions(checks = ValidationOptions.default.checks :+ "duplicate-row")
-    val keyRep = parity("keys")(ValidationRunner.runCsv(spark, keys, keySchema, withDupRows)._1)
+    val keyRep = parity("keys", keys, keySchema, withDupRows)(TableSource.readCsv(spark, keys))
     assert(codes(keyRep) == Set("missing-value", "unique-constraint", "duplicate-row"))
 
     // the per-code cap (1,000) hides the blank PK cell's required error
@@ -186,7 +227,7 @@ class SourceSpec extends SparkSpec {
     val capSchema = TableSchema(
       Seq(Field("id", constraints = fc.copy(required = true)), Field("name", constraints = fc.copy(required = true))),
       primaryKey = Seq("id"))
-    val capRep = parity("cap")(ValidationRunner.runCsv(spark, capPath, capSchema)._1)
+    val capRep = parity("cap", capPath, capSchema)(TableSource.readCsv(spark, capPath))
     assert(codes(capRep) == Set("required-constraint"), "the uncapped probe must drop the unique-constraint noise")
   }
 

@@ -41,18 +41,11 @@ trait SparkSpec extends AnyFunSuite {
     sc.statusTracker.getJobIdsForGroup(group).length
   }
 
-  /** Runs `body` with the shared session's
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` set to `size`, and
-    * restores it afterwards. A 1-byte size keeps every driver-parsed source
-    * above the one-partition threshold (`TableSource.localFrame`): a
-    * parallel scan with the uniqueness hash prefilter. */
-  def withAdvisorySize[T](size: String)(body: => T): T = {
-    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val prev = spark.conf.getAll.get(key)
-    spark.conf.set(key, size)
-    try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+  /** The rows of a driver-parsed source frame as the bare local relation
+    * `TableSource.localFrame` builds above its one-partition bound: a
+    * parallel scan, on which uniqueness keeps its hash prefilter. */
+  def parallelScan(df: DataFrame): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 }
 
 object SparkSpec {
