@@ -28,6 +28,15 @@ import graft.schema._
   * uniqueness skips its hash prefilter, and `run` (row checks, exact
   * windows and the per-code cap) is one Spark job in one task.
   *
+  * A driver-local input (a `LocalRelation`, bare or under that
+  * `Repartition(1)`, with no dimension frames) is planned once per
+  * descriptor: [[PlanCache]] keeps its analyzed plans without the rows, and
+  * the next resource with the same descriptor, config, frame schema,
+  * partition shape, session and SQL confs puts its rows into every leaf of
+  * them instead of building and analyzing the plan again. Its row count is
+  * the relation's, which the driver holds, so `run` needs no row-count
+  * `Observation` and no count job, with or without a `rowLimit`.
+  *
   * Row numbers: the engine needs a stable 1-based row identity for report
   * parity (reference rows are file-ordered, header = row 1). The caller
   * supplies `rowNumberCol`; for headered fixture parity use values starting
@@ -80,16 +89,69 @@ object ValidationRunner {
 
   /** Build the full lazy validation plan. Does not trigger any job.
     *
+    * A driver-local input without an Observation reuses the cached plan of
+    * an earlier resource of the same shape, its rows rebound ([[PlanCache]]);
+    * a miss builds the plan and caches it.
+    *
     * @param rowCountObs when set (and row checks are active), an Observation
     *   counting the scanned rows is attached BETWEEN the scan and the
     *   violation filter — the optimizer does not push predicates through
     *   CollectMetrics, so the count sees every row and arrives with the same
-    *   job that computes the violations (no second pass over 100 TB). */
+    *   job that computes the violations (no second pass over 100 TB). Such
+    *   a plan is always built fresh: an Observation is per-run state. */
   def plan(
       df0: DataFrame,
       schema: TableSchema,
       cfg: ValidationConfig,
       rowCountObs: Option[org.apache.spark.sql.Observation] = None
+  ): ValidationResult = {
+    val p = planned(df0, schema, cfg, rowCountObs)
+    ValidationResult(p.violations, p.headerViolations, p.headers, p.observedRows)
+  }
+
+  /** A plan as `run` executes it: the capped violations it collects, the
+    * uncapped ones (what `plan` returns and the saturated-cap probe reads;
+    * each built on first use) and the driver-side parts. */
+  private final class Planned(
+      capped0: => DataFrame,
+      violations0: => DataFrame,
+      val headerViolations: Seq[Violation],
+      val headers: Seq[String],
+      val observedRows: Boolean
+  ) {
+    lazy val capped: DataFrame = capped0
+    lazy val violations: DataFrame = violations0
+  }
+
+  /** A driver-local input without an Observation rebinds its rows into the
+    * cached plan of its key; any other input, or a miss, builds the plan,
+    * and a cacheable miss keeps it. */
+  private def planned(
+      df: DataFrame,
+      schema: TableSchema,
+      cfg: ValidationConfig,
+      rowCountObs: Option[org.apache.spark.sql.Observation]
+  ): Planned = {
+    val local = if (rowCountObs.isEmpty) PlanCache.local(df) else None
+    val key = local.flatMap(PlanCache.key(df, _, schema, cfg))
+    (local, key.flatMap(PlanCache.get)) match {
+      case (Some(in), Some(t)) =>
+        val spark = df.sparkSession
+        new Planned(t.cappedOf(spark, in), t.violationsOf(spark, in), t.headerViolations, t.headers, observedRows = false)
+      case _ =>
+        val r = build(df, schema, cfg, rowCountObs)
+        val p = new Planned(cap(r.violations, cfg), r.violations, r.headerViolations, r.headers, r.observedRows)
+        for (in <- local; k <- key; t <- PlanCache.template(in, p.violations, p.capped, p.headerViolations, p.headers))
+          PlanCache.put(k, t)
+        p
+    }
+  }
+
+  private def build(
+      df0: DataFrame,
+      schema: TableSchema,
+      cfg: ValidationConfig,
+      rowCountObs: Option[org.apache.spark.sql.Observation]
   ): ValidationResult = {
     val opts = cfg.options
     // row limit (goodtables row_limit; warning handled in report())
@@ -172,6 +234,19 @@ object ValidationRunner {
     ValidationResult(parts.reduce(_ unionAll _), headerViols, dataCols, observedRows = observe.isDefined)
   }
 
+  /** per-code cap (bounded by default — see ValidationOptions): the window
+    * shuffles only VIOLATIONS, never source rows */
+  private def cap(violations: DataFrame, cfg: ValidationConfig): DataFrame = cfg.options.errorLimitPerCode match {
+    case Some(n) =>
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(col("code")).orderBy(col("row_number").asc_nulls_first)
+      violations
+        .withColumn("_rk", row_number().over(w))
+        .filter(col("_rk") <= n)
+        .drop("_rk")
+    case None => violations
+  }
+
   /** keep payload columns + row number available to shuffle checks, with the
     * row-number column positioned last so rowPayload(dataCols) excludes it */
   private def dropRowNum(df: DataFrame, dataCols: Seq[String], cfg: ValidationConfig): DataFrame =
@@ -248,31 +323,21 @@ object ValidationRunner {
     * caps, row/header injection, status assignment). */
   def run(df: DataFrame, schema: TableSchema, cfg: ValidationConfig): (ValidationReport, String) = {
     val t0 = System.nanoTime()
-    // row count rides the violations job as an Observation (one pass). The
+    // a driver-local input's row count is its relation's. Otherwise the
+    // count rides the violations job as an Observation (one pass); the
     // rowLimit debug path still needs the RAW count for its warning, so only
     // that path pays a separate (metadata-cheap on parquet) count.
+    val local = PlanCache.local(df)
     val obs = org.apache.spark.sql.Observation()
-    val result = plan(df, schema, cfg, rowCountObs = if (cfg.options.rowLimit.isEmpty) Some(obs) else None)
+    val result = planned(df, schema, cfg, if (local.isEmpty && cfg.options.rowLimit.isEmpty) Some(obs) else None)
 
     import org.apache.spark.sql.Row
     val collected: Seq[Violation] = {
-      // per-code cap (bounded by default — see ValidationOptions): the
-      // window shuffles only VIOLATIONS, never source rows
-      val capped = cfg.options.errorLimitPerCode match {
-        case Some(cap) =>
-          import org.apache.spark.sql.expressions.Window
-          val w = Window.partitionBy(col("code")).orderBy(col("row_number").asc_nulls_first)
-          result.violations
-            .withColumn("_rk", row_number().over(w))
-            .filter(col("_rk") <= cap)
-            .drop("_rk")
-        case None => result.violations
-      }
       // NOTE: no DataFrame-level orderBy here — a global sort directly above
       // the scan runs a range-sampling job that would execute the observed
       // scan TWICE (double-counting rows and doubling I/O). The collected
       // set is bounded (capped), so ordering is driver-side.
-      capped
+      result.capped
         .collect()
         .toSeq
         .map { r: Row =>
@@ -287,14 +352,15 @@ object ValidationRunner {
         .sortBy(v => (v.rowNumber.getOrElse(Long.MinValue), v.columnNumber.getOrElse(Int.MinValue), v.code))
     }
 
-    val (scanned, rawCount) =
-      if (result.observedRows) {
+    val (scanned, rawCount) = local match {
+      case Some(in) => (cfg.options.rowLimit.fold(in.rows)(math.min(_, in.rows)), in.rows)
+      case None if result.observedRows =>
         val n = obs.get("_rows").asInstanceOf[Long] // already complete: collect() ran the scan
         (n, n)
-      } else {
+      case None =>
         val raw = df.count()
         (cfg.options.rowLimit.fold(raw)(math.min(_, raw)), raw)
-      }
+    }
 
     // misleading-uniqueness filter (jobs.py:174-176, 545-569): if a PK column
     // also has required-constraint errors, unique-constraint errors are noise

@@ -29,7 +29,11 @@ import graft.stats.Packing
   *
   * Returns the (id, bin, shard) assignment frame (what a manifest records;
   * also what the driver-level oracle checks — q76 reads the WRITTEN files
-  * back and re-derives the assignment in SQL). */
+  * back and re-derives the assignment in SQL).
+  *
+  * `truncate` cuts the assignment's lineage once before the write; it must
+  * be eager (the default `localCheckpoint(true)`), since the write samples
+  * its input and would otherwise run the scan under the join twice. */
 object ShardedSink {
 
   def write(
@@ -39,7 +43,8 @@ object ShardedSink {
       weight: Column,
       budget: Long,
       shards: Int,
-      path: String
+      path: String,
+      truncate: DataFrame => DataFrame = _.localCheckpoint(true)
   ): DataFrame = {
     require(shards > 0, s"shards must be positive: $shards")
     val bins = Packing.assignBins(df, id, order, weight, budget)
@@ -47,9 +52,8 @@ object ShardedSink {
     // input before shuffling it, so without the cut the PrefixScan plan
     // under the join executed twice (sampling pass + real pass); 24 B/row,
     // the same assignment a manifest records anyway
-    val assignment = bins.select(
-      col("id"), col("bin"), pmod(col("bin"), lit(shards.toLong)).as("shard"))
-      .localCheckpoint(true)
+    val assignment = truncate(bins.select(
+      col("id"), col("bin"), pmod(col("bin"), lit(shards.toLong)).as("shard")))
     // caller contract: df must not already carry `bin`/`shard` columns
     df.withColumn("id", id.cast("long"))
       .join(assignment, Seq("id"))

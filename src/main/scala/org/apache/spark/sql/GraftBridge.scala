@@ -10,6 +10,15 @@ object GraftBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
+  /** A frame over an already analyzed `plan` (`classic.Dataset.ofRows`).
+    * A Dataset adds its id to the tag set on its plan's root; a plan made
+    * by transforming a shared one copies that set by reference, so the tag
+    * is dropped first and the new Dataset starts its own. */
+  def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame = {
+    plan.unsetTagValue(classic.Dataset.DATASET_ID_TAG)
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  }
+
   /** Idempotent runtime registration of a scalar function builder. */
   def registerFunction(
       spark: SparkSession,
