@@ -1,12 +1,11 @@
 package graft.checks
 
-import scala.annotation.tailrec
-
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Repartition}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+
+import graft.sources.TableSource
 
 /** Uniqueness checks — single-column `unique` constraints, the composite
   * primary-key check, and exact duplicate-row detection.
@@ -117,10 +116,11 @@ object UniquenessCheck {
   /** Hash prefilter: rows whose `_kh` occurs more than once. The 8-byte hash
     * and its count are all that shuffle; the candidate-hash set is joined
     * back (broadcast when the planner can size it). An unsalted base that is
-    * one partition by construction is returned whole: with no exchange to
-    * shrink, the count pass and the broadcast would only add jobs. */
+    * one partition by construction (`TableSource.onePartition`) is returned
+    * whole: with no exchange to shrink, the count pass and the broadcast
+    * would only add jobs. */
   private[checks] def candidateRows(base: DataFrame, salts: Int = 0): DataFrame =
-    if (salts == 0 && onePartition(base)) base
+    if (salts == 0 && TableSource.onePartition(base)) base
     else {
       val counted =
         if (salts > 0)
@@ -129,20 +129,6 @@ object UniquenessCheck {
       val candHashes = counted.filter(col("_hc") > 1).select(col("_kh"))
       base.join(candHashes, "_kh")
     }
-
-  /** True when `df` is one partition by construction: its analyzed plan is a
-    * `Repartition(1)` (a small `TableSource.localFrame`) seen through
-    * projections and filters only. Anything else (a file scan, an RDD, a
-    * `limit`) may be split, and keeps the hash prefilter. */
-  private[graft] def onePartition(df: DataFrame): Boolean = {
-    @tailrec def walk(plan: LogicalPlan): Boolean = plan match {
-      case Project(_, child)    => walk(child)
-      case Filter(_, child)     => walk(child)
-      case Repartition(1, _, _) => true
-      case _                    => false
-    }
-    walk(df.queryExecution.analyzed)
-  }
 
   /** The exact step: every candidate row that repeats an earlier row of the
     * same (null-safe) key, with `_first` the key's first row number. One

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.StringType
 import graft.checks.{ForeignKeyCheck, HeaderChecks, RowChecks, UniquenessCheck}
 import graft.report.{ErrorSpec, TableReport, ValidationReport, Violation, RunStatus}
 import graft.schema._
+import graft.sources.TableSource
 
 /** End-to-end validation lifecycle over one table — the Spark-native
   * re-imagining of the reference's job pipeline (reference: jobs.py:53-222:
@@ -104,48 +105,31 @@ object ValidationRunner {
       schema: TableSchema,
       cfg: ValidationConfig,
       rowCountObs: Option[org.apache.spark.sql.Observation] = None
-  ): ValidationResult = {
-    val p = planned(df0, schema, cfg, rowCountObs)
-    ValidationResult(p.violations, p.headerViolations, p.headers, p.observedRows)
-  }
+  ): ValidationResult = cached(df0, schema, cfg, rowCountObs).fold(build(df0, schema, cfg, rowCountObs))(_._1)
 
-  /** A plan as `run` executes it: the capped violations it collects, the
-    * uncapped ones (what `plan` returns and the saturated-cap probe reads;
-    * each built on first use) and the driver-side parts. */
-  private final class Planned(
-      capped0: => DataFrame,
-      violations0: => DataFrame,
-      val headerViolations: Seq[Violation],
-      val headers: Seq[String],
-      val observedRows: Boolean
-  ) {
-    lazy val capped: DataFrame = capped0
-    lazy val violations: DataFrame = violations0
-  }
-
-  /** A driver-local input without an Observation rebinds its rows into the
-    * cached plan of its key; any other input, or a miss, builds the plan,
-    * and a cacheable miss keeps it. */
-  private def planned(
+  /** The plan of a driver-local input without an Observation, and the
+    * capped violations that `run` collects: its rows rebound into the cached
+    * plan of its key, or on a miss a new plan, kept for the next resource.
+    * None for any other input, which `build` plans. */
+  private def cached(
       df: DataFrame,
       schema: TableSchema,
       cfg: ValidationConfig,
       rowCountObs: Option[org.apache.spark.sql.Observation]
-  ): Planned = {
-    val local = if (rowCountObs.isEmpty) PlanCache.local(df) else None
-    val key = local.flatMap(PlanCache.key(df, _, schema, cfg))
-    (local, key.flatMap(PlanCache.get)) match {
-      case (Some(in), Some(t)) =>
-        val spark = df.sparkSession
-        new Planned(t.cappedOf(spark, in), t.violationsOf(spark, in), t.headerViolations, t.headers, observedRows = false)
-      case _ =>
-        val r = build(df, schema, cfg, rowCountObs)
-        val p = new Planned(cap(r.violations, cfg), r.violations, r.headerViolations, r.headers, r.observedRows)
-        for (in <- local; k <- key; t <- PlanCache.template(in, p.violations, p.capped, p.headerViolations, p.headers))
-          PlanCache.put(k, t)
-        p
+  ): Option[(ValidationResult, DataFrame)] =
+    for {
+      in <- if (rowCountObs.isEmpty) TableSource.local(df) else None
+      k  <- PlanCache.key(df, in, schema, cfg)
+    } yield PlanCache.get(k) match {
+      case Some(t) =>
+        val (violations, capped) = t.frames(df.sparkSession, in)
+        (ValidationResult(violations, t.headerViolations, t.headers, observedRows = false), capped)
+      case None =>
+        val r = build(df, schema, cfg, None)
+        val capped = cap(r.violations, cfg)
+        PlanCache.template(in, r.violations, capped, r.headerViolations, r.headers).foreach(PlanCache.put(k, _))
+        (r, capped)
     }
-  }
 
   private def build(
       df0: DataFrame,
@@ -327,9 +311,13 @@ object ValidationRunner {
     // count rides the violations job as an Observation (one pass); the
     // rowLimit debug path still needs the RAW count for its warning, so only
     // that path pays a separate (metadata-cheap on parquet) count.
-    val local = PlanCache.local(df)
+    val local = TableSource.local(df)
     val obs = org.apache.spark.sql.Observation()
-    val result = planned(df, schema, cfg, if (local.isEmpty && cfg.options.rowLimit.isEmpty) Some(obs) else None)
+    val rowCountObs = if (local.isEmpty && cfg.options.rowLimit.isEmpty) Some(obs) else None
+    val (result, capped) = cached(df, schema, cfg, rowCountObs).getOrElse {
+      val r = build(df, schema, cfg, rowCountObs)
+      (r, cap(r.violations, cfg))
+    }
 
     import org.apache.spark.sql.Row
     val collected: Seq[Violation] = {
@@ -337,7 +325,7 @@ object ValidationRunner {
       // the scan runs a range-sampling job that would execute the observed
       // scan TWICE (double-counting rows and doubling I/O). The collected
       // set is bounded (capped), so ordering is driver-side.
-      result.capped
+      capped
         .collect()
         .toSeq
         .map { r: Row =>

@@ -29,11 +29,7 @@ import graft.stats.Packing
   *
   * Returns the (id, bin, shard) assignment frame (what a manifest records;
   * also what the driver-level oracle checks — q76 reads the WRITTEN files
-  * back and re-derives the assignment in SQL).
-  *
-  * `truncate` cuts the assignment's lineage once before the write; it must
-  * be eager (the default `localCheckpoint(true)`), since the write samples
-  * its input and would otherwise run the scan under the join twice. */
+  * back and re-derives the assignment in SQL). */
 object ShardedSink {
 
   def write(
@@ -43,8 +39,7 @@ object ShardedSink {
       weight: Column,
       budget: Long,
       shards: Int,
-      path: String,
-      truncate: DataFrame => DataFrame = _.localCheckpoint(true)
+      path: String
   ): DataFrame = {
     require(shards > 0, s"shards must be positive: $shards")
     val bins = Packing.assignBins(df, id, order, weight, budget)
@@ -52,8 +47,9 @@ object ShardedSink {
     // input before shuffling it, so without the cut the PrefixScan plan
     // under the join executed twice (sampling pass + real pass); 24 B/row,
     // the same assignment a manifest records anyway
-    val assignment = truncate(bins.select(
-      col("id"), col("bin"), pmod(col("bin"), lit(shards.toLong)).as("shard")))
+    val assignment = bins.select(
+      col("id"), col("bin"), pmod(col("bin"), lit(shards.toLong)).as("shard"))
+      .localCheckpoint(true)
     // caller contract: df must not already carry `bin`/`shard` columns
     df.withColumn("id", id.cast("long"))
       .join(assignment, Seq("id"))

@@ -2,9 +2,11 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, Repartition}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -209,6 +211,33 @@ object TableSource {
   private[sources] def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame = {
     val df = spark.createDataFrame(rows.asJava, schema)
     if (fitsOnePartition(rows)) df.coalesce(1) else df
+  }
+
+  /** The rows of a driver-local frame: its analyzed plan is a
+    * `LocalRelation`, bare (`onePartition` false) or under the
+    * `Repartition(1)` of [[localFrame]]. */
+  private[graft] final case class Local(relation: LocalRelation, onePartition: Boolean) {
+    def rows: Long = relation.data.length.toLong
+  }
+
+  private[graft] def local(df: DataFrame): Option[Local] = df.queryExecution.analyzed match {
+    case l: LocalRelation                    => Some(Local(l, onePartition = false))
+    case Repartition(1, _, l: LocalRelation) => Some(Local(l, onePartition = true))
+    case _                                   => None
+  }
+
+  /** True when `df` is one partition by construction: its analyzed plan is
+    * the `Repartition(1)` of a small [[localFrame]] seen through projections
+    * and filters only. Anything else (a file scan, an RDD, a `limit`) may be
+    * split. */
+  private[graft] def onePartition(df: DataFrame): Boolean = {
+    @tailrec def walk(plan: LogicalPlan): Boolean = plan match {
+      case Project(_, child)    => walk(child)
+      case Filter(_, child)     => walk(child)
+      case Repartition(1, _, _) => true
+      case _                    => false
+    }
+    walk(df.queryExecution.analyzed)
   }
 
   /** The largest relation, in row bytes, that [[localFrame]] makes one

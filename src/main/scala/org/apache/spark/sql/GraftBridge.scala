@@ -19,6 +19,10 @@ object GraftBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
   }
 
+  /** The id of `spark`, unique per session (`newSession` included); a key
+    * that names a session by it does not keep the session reachable. */
+  def sessionId(spark: SparkSession): String = spark.asInstanceOf[classic.SparkSession].sessionUUID
+
   /** Idempotent runtime registration of a scalar function builder. */
   def registerFunction(
       spark: SparkSession,

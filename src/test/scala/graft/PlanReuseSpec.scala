@@ -5,7 +5,7 @@ import java.nio.file.Files
 import scala.util.{Random, Try}
 
 import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, TimeZoneAwareExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Repartition}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, Repartition}
 
 import graft.runner.{PlanCache, ValidationConfig, ValidationRunner}
 import graft.schema._
@@ -149,7 +149,7 @@ class PlanReuseSpec extends SparkSpec {
     val a = csv("bigA.csv", Seq("id", "note"), rows("a", 12000))
     val b = csv("bigB.csv", Seq("id", "note"), rows("b", 12500))
     val parsedB = TableSource.readCsv(spark, b).toOption.get
-    assert(PlanCache.local(parsedB.df).exists(!_.onePartition), "above the bound the relation stays parallel")
+    assert(TableSource.local(parsedB.df).exists(!_.onePartition), "above the bound the relation stays parallel")
     val want = fresh(b, schema)
     PlanCache.clear()
     validate(small, schema)
@@ -213,13 +213,34 @@ class PlanReuseSpec extends SparkSpec {
     }
   }
 
+  test("reuse: a session never gets another session's plan, and no template keeps an RDD leaf") {
+    val a = csv("s1.csv", header, peopleRows(10, 140))
+    val b = csv("s2.csv", header, peopleRows(11, 150))
+    val want = fresh(b, people)
+    PlanCache.clear()
+    validate(a, people)
+    val other = spark.newSession()
+    assert(other.conf.getAll == spark.conf.getAll, "the sessions differ only in their id")
+    val json = timeless(ValidationRunner.runCsv(other, b, people)._1.toJson)
+    assert(PlanCache.size == 2, "the other session plans B afresh")
+    assert(json == want)
+    // all-string fields and blank-row skipped leave no row check: that
+    // branch is an empty RDD, which holds its context, so the plan is not kept
+    val plain = TableSchema(Seq(Field("id", constraints = FieldConstraints(unique = true)), Field("name")))
+    val p = csv("s3.csv", Seq("id", "name"), Seq(Seq("1", "x"), Seq("1", "y")))
+    val (plainJson, _) = hit(p, plain, ValidationOptions(skipChecks = Seq("blank-row")))
+    assert(PlanCache.size == 2 && plainJson.contains("unique-constraint"))
+    for (t <- PlanCache.templates; plan <- Seq(t.violations, t.capped))
+      assert(plan.collectWithSubqueries { case l: LeafNode => l }.forall(_.isInstanceOf[LocalRelation]))
+  }
+
   test("cache safety: bounded, row-free templates, a hit runs one job and plan() on a hit none") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     PlanCache.clear()
     val df = spark.createDataFrame(java.util.Arrays.asList(Row("a", 2L), Row("b", 3L), Row("a", 4L)),
       StructType(Seq(StructField("v", StringType), StructField("_rid", LongType))))
-    assert(PlanCache.local(df).nonEmpty)
+    assert(TableSource.local(df).nonEmpty)
     for (i <- 1 to PlanCache.Bound + 4) {
       val schema = TableSchema(Seq(Field("v", constraints = FieldConstraints(unique = true, maxLength = Some(i)))))
       ValidationRunner.plan(df, schema, ValidationConfig(rowNumberCol = "_rid"))

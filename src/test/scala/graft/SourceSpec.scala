@@ -113,7 +113,7 @@ class SourceSpec extends SparkSpec {
 
   test("one-partition bound: a resource of exactly OnePartitionBytes is one partition, one row more is a parallel scan") {
     import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
-    import graft.checks.UniquenessCheck.onePartition
+    import graft.sources.TableSource.onePartition
     // every row is 64 row bytes: four cells (three strings and the row
     // number) at 8 bytes each plus 32 bytes of ASCII strings (none numeric,
     // so the XLSX round trip keeps them as written)
@@ -154,7 +154,7 @@ class SourceSpec extends SparkSpec {
   }
 
   test("onePartition: a small local frame through select/filter, never a file scan, a Seq frame or a limit") {
-    import graft.checks.UniquenessCheck.onePartition
+    import graft.sources.TableSource.onePartition
     val path = writeTmp("one.csv", ("a,b" +: (1 to 50).map(i => s"$i,x$i")).mkString("\n"))
     val small = TableSource.readCsv(spark, path).toOption.get.df
     assert(onePartition(small))
@@ -167,7 +167,7 @@ class SourceSpec extends SparkSpec {
   }
 
   test("one-partition parity: every source's report is byte-identical with and without the prefilter") {
-    import graft.checks.UniquenessCheck.onePartition
+    import graft.sources.TableSource.onePartition
     import graft.sources.{BiffSource, ShapefileSource, XlsxSource}
     // as read: one partition, no prefilter; the same rows as a parallel
     // scan: the hash prefilter
