@@ -74,7 +74,7 @@ object UniquenessCheck {
   ): DataFrame = {
     val rn = rowNumber.cast(LongType).as("_rn")
     val pid = partitionId.getOrElse(lit(null)).cast(IntegerType).as("_pid")
-    val notAllNull = keyCols.map(col(_).isNotNull).reduce(_ || _)
+    val notAllNull = RowChecks.balanced(keyCols.map(col(_).isNotNull))(_ || _)
     val keyHash = xxhash64(keyCols.map(col): _*).as("_kh")
     val base = df
       .filter(notAllNull)

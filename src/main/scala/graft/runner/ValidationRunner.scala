@@ -16,7 +16,8 @@ import graft.sources.TableSource
   * Execution shape (designed for the 1000-executor / 100 TB case):
   *  - header checks: driver-side metadata diffs, zero jobs;
   *  - every row-scoped check: ONE projection over ONE scan (whole-stage
-  *    codegen), producing a violations frame via array+filter+explode;
+  *    codegen): `RowChecks.gate` filters on the OR of every condition (a
+  *    balanced tree) and explodes one violation per failed check;
   *  - uniqueness / duplicate-row: partial-agg shuffle of an 8-byte hash, the
   *    candidate hashes broadcast back, one exact window over the candidates
   *    — skew-robust, see [[UniquenessCheck]];
@@ -29,14 +30,19 @@ import graft.sources.TableSource
   * uniqueness skips its hash prefilter, and `run` (row checks, exact
   * windows and the per-code cap) is one Spark job in one task.
   *
-  * A driver-local input (a `LocalRelation`, bare or under that
-  * `Repartition(1)`, with no dimension frames) is planned once per
-  * descriptor: [[PlanCache]] keeps its analyzed plans without the rows, and
-  * the next resource with the same descriptor, config, frame schema,
-  * partition shape, session and SQL confs puts its rows into every leaf of
-  * them instead of building and analyzing the plan again. Its row count is
-  * the relation's, which the driver holds, so `run` needs no row-count
-  * `Observation` and no count job, with or without a `rowLimit`.
+  * Such a one-partition input without a `rowLimit` or dimension frames is
+  * planned once per descriptor, down to the executable plan: [[PlanCache]]
+  * keeps its analyzed uncapped plan and its capped plan, optimized once
+  * for any rows, both without the rows. The next resource with the same
+  * descriptor, config, frame schema, session and SQL confs binds its rows
+  * into every leaf, and `run` prepares the capped plan as a physical plan
+  * and collects it directly, as one job described `runner/run`: no
+  * analysis, no optimization, no adaptive wrapper. Any other input,
+  * including a bare local relation above `TableSource.OnePartitionBytes`,
+  * is planned afresh and collected through its `Dataset`. A driver-local
+  * input's row count is the relation's, which the driver holds, so `run`
+  * needs no row-count `Observation` and no count job, with or without a
+  * `rowLimit`.
   *
   * Row numbers: the engine needs a stable 1-based row identity for report
   * parity (reference rows are file-ordered, header = row 1). The caller
@@ -90,9 +96,9 @@ object ValidationRunner {
 
   /** Build the full lazy validation plan. Does not trigger any job.
     *
-    * A driver-local input without an Observation reuses the cached plan of
-    * an earlier resource of the same shape, its rows rebound ([[PlanCache]]);
-    * a miss builds the plan and caches it.
+    * A one-partition driver-local input whose plan `run` has kept
+    * ([[PlanCache]]) gets that plan's analyzed violations with its rows
+    * bound, not analyzed again; any other input is planned afresh.
     *
     * @param rowCountObs when set (and row checks are active), an Observation
     *   counting the scanned rows is attached BETWEEN the scan and the
@@ -105,31 +111,23 @@ object ValidationRunner {
       schema: TableSchema,
       cfg: ValidationConfig,
       rowCountObs: Option[org.apache.spark.sql.Observation] = None
-  ): ValidationResult = cached(df0, schema, cfg, rowCountObs).fold(build(df0, schema, cfg, rowCountObs))(_._1)
+  ): ValidationResult =
+    keyed(df0, schema, cfg, rowCountObs)
+      .flatMap { case (k, in) => PlanCache.get(k).map(_.result(df0.sparkSession, in)) }
+      .getOrElse(build(df0, schema, cfg, rowCountObs))
 
-  /** The plan of a driver-local input without an Observation, and the
-    * capped violations that `run` collects: its rows rebound into the cached
-    * plan of its key, or on a miss a new plan, kept for the next resource.
-    * None for any other input, which `build` plans. */
-  private def cached(
+  /** The plan-cache key of a one-partition local input without an
+    * Observation, with its rows; None for any other input. */
+  private def keyed(
       df: DataFrame,
       schema: TableSchema,
       cfg: ValidationConfig,
       rowCountObs: Option[org.apache.spark.sql.Observation]
-  ): Option[(ValidationResult, DataFrame)] =
+  ): Option[(PlanCache.Key, TableSource.Local)] =
     for {
       in <- if (rowCountObs.isEmpty) TableSource.local(df) else None
       k  <- PlanCache.key(df, in, schema, cfg)
-    } yield PlanCache.get(k) match {
-      case Some(t) =>
-        val (violations, capped) = t.frames(df.sparkSession, in)
-        (ValidationResult(violations, t.headerViolations, t.headers, observedRows = false), capped)
-      case None =>
-        val r = build(df, schema, cfg, None)
-        val capped = cap(r.violations, cfg)
-        PlanCache.template(in, r.violations, capped, r.headerViolations, r.headers).foreach(PlanCache.put(k, _))
-        (r, capped)
-    }
+    } yield (k, in)
 
   private def build(
       df0: DataFrame,
@@ -258,40 +256,12 @@ object ValidationRunner {
     )
     if (compiled.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], vSchema)
-    val entries = compiled.map { ck =>
-      when(
-        ck.cond,
-        struct(
-          lit(ck.code).as("code"),
-          rowNum.cast(LongType).as("row_number"),
-          ck.columnNumber.map(n => lit(n)).getOrElse(lit(null)).cast(IntegerType).as("column_number"),
-          ck.message.as("message")
-        )
-      )
-    }
-    // HOT-PATH DESIGN: every expression here must stay inside whole-stage
-    // codegen. The scan-side filter is a plain boolean OR of all check
-    // conditions; the k-entry violation array is exploded DIRECTLY
-    // (CreateArray/CaseWhen/Generate are all codegen'd) and the per-entry
-    // nulls are dropped AFTER the Generate. The earlier shape —
-    // functions.filter(array(...)) + size(...) > 0 — used the higher-order
-    // ArrayFilter, which is CodegenFallback (interpreted), and predicate
-    // pushdown merged the size(...) > 0 test into the scan filter, so the
-    // interpreted array assembly ran 2× in the scan filter plus 1× in the
-    // projection for every violating row (visible in the r6-before plans).
-    // Exploding nulls costs k generated rows per VIOLATING row only (the
-    // OR pre-filter still drops clean rows first), and `anyViolation` true
-    // guarantees ≥1 non-null entry, so no row is lost.
-    // (r3 measured the OR gate: 775k rows/s -> multi-M rows/s at 20M rows)
-    val anyViolation = compiled.map(ck => coalesce(ck.cond, lit(false))).reduce(_ || _)
     val extra = passthrough.map(col) // typed columns carried verbatim
-    df.filter(anyViolation)
-      .select(Seq(
-        explode(array(entries: _*)).as("_v"),
-        RowChecks.rowPayload(dataCols).as("row"),
-        pidCol.getOrElse(lit(null)).cast(IntegerType).as("partition_id")
-      ) ++ extra: _*)
-      .filter(col("_v").isNotNull)
+    val carried = Seq(
+      RowChecks.rowPayload(dataCols).as("row"),
+      pidCol.getOrElse(lit(null)).cast(IntegerType).as("partition_id")
+    ) ++ extra
+    RowChecks.gate(df, compiled, rowNum, carried)
       .select(Seq(
         col("_v.code"),
         col("_v.row_number"),
@@ -314,10 +284,19 @@ object ValidationRunner {
     val local = TableSource.local(df)
     val obs = org.apache.spark.sql.Observation()
     val rowCountObs = if (local.isEmpty && cfg.options.rowLimit.isEmpty) Some(obs) else None
-    val (result, capped) = cached(df, schema, cfg, rowCountObs).getOrElse {
-      val r = build(df, schema, cfg, rowCountObs)
-      (r, cap(r.violations, cfg))
+    val spark = df.sparkSession
+    lazy val built = build(df, schema, cfg, rowCountObs)
+    lazy val capped = cap(built.violations, cfg)
+    // a one-partition local input runs its key's kept plan, kept now on a
+    // miss; any other input collects its freshly built capped frame
+    val kept = keyed(df, schema, cfg, rowCountObs).flatMap { case (k, in) =>
+      PlanCache.get(k)
+        .orElse(PlanCache.template(in, built, capped).map { t => PlanCache.put(k, t); t })
+        .map(_ -> in)
     }
+    val (headers, headerViolations) =
+      kept.fold((built.headers, built.headerViolations)) { case (t, _) => (t.headers, t.headerViolations) }
+    def uncapped = kept.fold(built.violations) { case (t, in) => t.result(spark, in).violations }
 
     import org.apache.spark.sql.Row
     val collected: Seq[Violation] = {
@@ -325,10 +304,8 @@ object ValidationRunner {
       // the scan runs a range-sampling job that would execute the observed
       // scan TWICE (double-counting rows and doubling I/O). The collected
       // set is bounded (capped), so ordering is driver-side.
-      capped
-        .collect()
-        .toSeq
-        .map { r: Row =>
+      kept.fold {
+        capped.collect().toSeq.map { r: Row =>
           Violation(
             code = r.getString(0),
             rowNumber = if (r.isNullAt(1)) None else Some(r.getLong(1)),
@@ -337,12 +314,13 @@ object ValidationRunner {
             row = if (r.isNullAt(4)) Nil else r.getSeq[String](4)
           )
         }
+      } { case (t, in) => t.collect(spark, in) }
         .sortBy(v => (v.rowNumber.getOrElse(Long.MinValue), v.columnNumber.getOrElse(Int.MinValue), v.code))
     }
 
     val (scanned, rawCount) = local match {
       case Some(in) => (cfg.options.rowLimit.fold(in.rows)(math.min(_, in.rows)), in.rows)
-      case None if result.observedRows =>
+      case None if built.observedRows =>
         val n = obs.get("_rows").asInstanceOf[Long] // already complete: collect() ran the scan
         (n, n)
       case None =>
@@ -352,7 +330,7 @@ object ValidationRunner {
 
     // misleading-uniqueness filter (jobs.py:174-176, 545-569): if a PK column
     // also has required-constraint errors, unique-constraint errors are noise
-    val pkCols = schema.primaryKey.flatMap(n => Option(result.headers.indexOf(n) + 1).filter(_ > 0))
+    val pkCols = schema.primaryKey.flatMap(n => Option(headers.indexOf(n) + 1).filter(_ > 0))
     val pkHasRequiredErrors = {
       val inCollected = collected.exists(v =>
         v.code == "required-constraint" && v.columnNumber.exists(pkCols.contains))
@@ -365,7 +343,7 @@ object ValidationRunner {
         collected.count(_.code == "required-constraint") >= cap)
       if (inCollected) true
       else if (pkCols.nonEmpty && collected.exists(_.code == "unique-constraint") && capSaturated)
-        !result.violations
+        !uncapped
           .filter(col("code") === "required-constraint" && col("column_number").isin(pkCols: _*))
           .isEmpty
       else false
@@ -374,7 +352,7 @@ object ValidationRunner {
       if (pkHasRequiredErrors) collected.filterNot(_.code == "unique-constraint")
       else collected
 
-    val all = result.headerViolations ++ filtered
+    val all = headerViolations ++ filtered
     val elapsed = (System.nanoTime() - t0) / 1e9
     val warnings =
       cfg.options.rowLimit.toSeq.collect {
@@ -382,7 +360,7 @@ object ValidationRunner {
       }
     val table = TableReport(
       source = cfg.source,
-      headers = result.headers,
+      headers = headers,
       rowCount = scanned + (if (cfg.headerInRowCount) 1 else 0),
       errorCount = all.size.toLong,
       time = math.round(elapsed * 1000.0) / 1000.0,

@@ -5,17 +5,18 @@ import java.nio.file.Files
 import scala.util.{Random, Try}
 
 import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, TimeZoneAwareExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, Repartition}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LocalRelation, LogicalPlan, Repartition}
 
 import graft.runner.{PlanCache, ValidationConfig, ValidationRunner}
 import graft.schema._
 import graft.sources.{TableSource, XlsxSource}
 
-/** Plan reuse for driver-local inputs: a resource whose descriptor, config,
-  * frame schema, partition shape, session and SQL confs equal an earlier
-  * one's rebinds its rows into that resource's cached analyzed plan. Every
-  * report here is compared with the report of a fresh plan of the same
-  * resource (cache emptied first), byte for byte except `time`. */
+/** Plan reuse for one-partition driver-local inputs: a resource whose
+  * descriptor, config, frame schema, session and SQL confs equal an
+  * earlier one's binds its rows into that resource's cached optimized plan
+  * and runs it. Every report here is compared with the report of a fresh
+  * plan of the same resource (cache emptied first), byte for byte except
+  * `time`. */
 class PlanReuseSpec extends SparkSpec {
 
   private val people = TableSchema.parse(
@@ -32,17 +33,17 @@ class PlanReuseSpec extends SparkSpec {
       |"customConstraints": ["salary > bonus * 4"]}""".stripMargin).toOption.get
   private val header = Seq("id", "name", "age", "email", "country", "joined", "dept", "salary", "bonus")
 
-  /** `n` People rows, a fifth of them with one planted defect; with
-    * `blankPk` one PK cell is blank, which drops the unique-constraint
-    * errors from the report. */
-  private def peopleRows(seed: Int, n: Int, blankPk: Boolean = false): Seq[Seq[String]] = {
+  /** `n` People rows, a fifth of them with one planted defect (none
+    * without `defects`); with `blankPk` one PK cell is blank, which drops
+    * the unique-constraint errors from the report. */
+  private def peopleRows(seed: Int, n: Int, blankPk: Boolean = false, defects: Boolean = true): Seq[Seq[String]] = {
     val rnd = new Random(seed)
     def letters(i: Int) = Integer.toString(i, 26).map(c => ('a' + Character.digit(c, 26)).toChar)
     (1 to n).map { i =>
       val cells = Array(i.toString, s"n$i", (20 + i % 50).toString, s"p${letters(i % 997)}@mail.org",
         Seq("fr", "de", "es")(i % 3), f"2020-01-${1 + i % 28}%02d", Seq("sales", "eng", "ops")(i % 3),
         (4000 + i).toString, (100 + i % 7).toString)
-      if (rnd.nextInt(5) == 0) rnd.nextInt(8) match {
+      if (defects && rnd.nextInt(5) == 0) rnd.nextInt(8) match {
         case 0 => cells(0) = (i - 1).max(1).toString
         case 1 => cells(1) = "a-very-long-name"
         case 2 => cells(2) = "130"
@@ -141,7 +142,7 @@ class PlanReuseSpec extends SparkSpec {
     assert(json == want && json.contains("extra-header"), json.take(400))
   }
 
-  test("reuse: a resource above OnePartitionBytes gets its own entry with the parallel plan shape") {
+  test("reuse: a resource above OnePartitionBytes is planned afresh, with the parallel plan shape") {
     val schema = TableSchema(Seq(Field("id", constraints = FieldConstraints(unique = true)), Field("note")))
     // about 90 row bytes a row: 12,000 rows are above the 1 MiB bound
     def rows(tag: String, n: Int) = (1 to n).map(i => Seq(s"$tag${i % (n - 7)}", f"$i%060d"))
@@ -149,19 +150,58 @@ class PlanReuseSpec extends SparkSpec {
     val a = csv("bigA.csv", Seq("id", "note"), rows("a", 12000))
     val b = csv("bigB.csv", Seq("id", "note"), rows("b", 12500))
     val parsedB = TableSource.readCsv(spark, b).toOption.get
-    assert(TableSource.local(parsedB.df).exists(!_.onePartition), "above the bound the relation stays parallel")
+    val cfg = ValidationConfig(rowNumberCol = "_row_number", source = b, headerInRowCount = true)
+    val inB = TableSource.local(parsedB.df)
+    assert(inB.exists(!_.onePartition), "above the bound the relation stays parallel")
+    assert(PlanCache.key(parsedB.df, inB.get, schema, cfg).isEmpty, "a parallel relation has no plan-cache key")
     val want = fresh(b, schema)
     PlanCache.clear()
     validate(small, schema)
     validate(a, schema)
-    assert(PlanCache.size == 2, "one entry per partition shape")
-    val (json, rebound) = hit(b, schema)
-    assert(rebound && json == want)
-    val cfg = ValidationConfig(rowNumberCol = "_row_number", source = b, headerInRowCount = true)
+    assert(PlanCache.size == 1, "only the one-partition resource keeps its plan")
+    assert(validate(b, schema) == want)
+    assert(PlanCache.size == 1)
     val viols = ValidationRunner.plan(parsedB.df, schema, cfg).violations
     assert(!viols.queryExecution.analyzed.exists(_.isInstanceOf[Repartition]))
     assert(viols.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
       "the parallel scan keeps the uniqueness prefilter")
+  }
+
+  test("reuse: a template holds for any rows: built from an all-clean or a one-row resource, a dirty one equals a fresh plan") {
+    // optimized with its rows, the all-clean resource's plan would have
+    // folded the row-check gate into an empty relation and pruned that
+    // branch, and the one-row resource's would bound every leaf at one row
+    val clean = csv("clean.csv", header, peopleRows(14, 150, defects = false))
+    val one = csv("one.csv", header, peopleRows(15, 1))
+    val dirty = csv("dirty.csv", header, peopleRows(16, 200))
+    val want = fresh(dirty, people)
+    assert(want.contains("pattern-constraint") && want.contains("unique-constraint"))
+    for (first <- Seq(clean, one)) {
+      PlanCache.clear()
+      val firstJson = validate(first, people)
+      assert(first != clean || firstJson.contains("\"error-count\": 0"), firstJson.take(300))
+      val (json, rebound) = hit(dirty, people)
+      assert(rebound && json == want, first)
+    }
+  }
+
+  test("reuse: a hit runs no optimizer rule") {
+    import org.apache.spark.sql.catalyst.rules.Rule
+    val a = csv("o1.csv", header, peopleRows(17, 130))
+    val b = csv("o2.csv", header, peopleRows(18, 140))
+    val want = fresh(b, people)
+    val isolated = spark.newSession()
+    val fired = new java.util.concurrent.atomic.AtomicInteger
+    isolated.experimental.extraOptimizations = Seq(new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = { fired.incrementAndGet(); plan }
+    })
+    PlanCache.clear()
+    ValidationRunner.runCsv(isolated, a, people)
+    assert(fired.get > 0 && PlanCache.size == 1, "a miss optimizes the template once")
+    fired.set(0)
+    val json = timeless(ValidationRunner.runCsv(isolated, b, people)._1.toJson)
+    assert(fired.get == 0, "a hit binds its rows into the optimized plan and runs it")
+    assert(PlanCache.size == 1 && json == want)
   }
 
   test("reuse: toggling ANSI mode or the session time zone gives the fresh-plan result") {
@@ -232,6 +272,10 @@ class PlanReuseSpec extends SparkSpec {
     assert(PlanCache.size == 2 && plainJson.contains("unique-constraint"))
     for (t <- PlanCache.templates; plan <- Seq(t.violations, t.capped))
       assert(plan.collectWithSubqueries { case l: LeafNode => l }.forall(_.isInstanceOf[LocalRelation]))
+    // the optimized template keeps the row-check gate over its leaf: no
+    // rows were folded into the relation while it was optimized
+    for (t <- PlanCache.templates)
+      assert(t.capped.exists { case Filter(_, _: LocalRelation) => true; case _ => false }, t.capped.treeString)
   }
 
   test("cache safety: bounded, row-free templates, a hit runs one job and plan() on a hit none") {
@@ -239,11 +283,11 @@ class PlanReuseSpec extends SparkSpec {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     PlanCache.clear()
     val df = spark.createDataFrame(java.util.Arrays.asList(Row("a", 2L), Row("b", 3L), Row("a", 4L)),
-      StructType(Seq(StructField("v", StringType), StructField("_rid", LongType))))
-    assert(TableSource.local(df).nonEmpty)
+      StructType(Seq(StructField("v", StringType), StructField("_rid", LongType)))).coalesce(1)
+    assert(TableSource.local(df).exists(_.onePartition))
     for (i <- 1 to PlanCache.Bound + 4) {
       val schema = TableSchema(Seq(Field("v", constraints = FieldConstraints(unique = true, maxLength = Some(i)))))
-      ValidationRunner.plan(df, schema, ValidationConfig(rowNumberCol = "_rid"))
+      ValidationRunner.run(df, schema, ValidationConfig(rowNumberCol = "_rid"))
       assert(PlanCache.size == math.min(i, PlanCache.Bound))
     }
     val a = csv("j1.csv", header, peopleRows(8, 200))

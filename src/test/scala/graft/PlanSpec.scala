@@ -385,6 +385,31 @@ class PlanSpec extends SparkSpec {
       s"the row-check filter must run codegen'd over the one-partition scan:\n$finalPlan")
   }
 
+  test("upload resource run: the kept plan runs as one job labelled runner/run") {
+    // the first run of the resource keeps its plan, the second binds its
+    // rows into it; both run it directly, under the op/label description,
+    // and give the thread its own description back
+    val (df, schema) = uploadResource()
+    val sc = spark.sparkContext
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        labels.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobDescription("outer")
+    try {
+      val reports = Seq.fill(2)(ValidationRunner.run(df, schema, uploadCfg)._1.tables.head.errors)
+      assert(reports.head == reports(1) && reports.head.nonEmpty)
+      assert(sc.getLocalProperty("spark.job.description") == "outer")
+    } finally {
+      sc.setJobDescription(null)
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(labels.toArray.toSeq == Seq("runner/run", "runner/run"))
+  }
+
   test("dedupLines plan: winner election is a partial-aggregated hash groupBy, joins are equi") {
     import spark.implicits._
     val docs = (1L to 80L).map(i => (i, s"line${i % 9}\nline${i % 7}\nuniq$i")).toDF("doc_id", "text")
